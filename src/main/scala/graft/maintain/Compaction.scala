@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.log.{ConflictException, CommitFileExistsException, LogAction}
 import graft.meta.SegmentMeta
-import graft.table.{FooterStats, TsTable}
+import graft.table.{Change, FooterStats, TsTable}
 
 /** Bin-packing small-file compaction with space-filling-curve clustering —
   * the centerpiece of the north rule (new vs the reference, whose roadmap
@@ -266,8 +266,11 @@ object Compaction {
       // included: the masked rows were already deleted, and recorded, by
       // the commit that attached the DV) — mark it so change-feed readers
       // skip it instead of erroring on an unrecorded Remove+Add
-      table.swapSegments(sorted, inputs, maxRetries,
-        extraActions = Seq(graft.log.LogAction.DataNeutral))
+      table.scoped { scope =>
+        val added = scope.stageSegments(sorted)
+        (added, scope.commit(maxRetries)(_ => Change(removes = inputs, adds = added,
+          actions = Seq(LogAction.DataNeutral))))
+      }
     }
   }
 

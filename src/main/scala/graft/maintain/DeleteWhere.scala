@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.coverage.Bitmap
 import graft.meta.{PathNorm, SegmentMeta}
 import graft.scan.StatsPruning
-import graft.table.{BucketDomainOverflowException, DeletionVectors, TsTable}
+import graft.table.{BucketDomainOverflowException, Change, CommitScope, DeletionVectors, TsTable}
 
 /** DELETE WHERE — predicate delete, the training-data governance operator
   * (redact contaminated documents, strip a source, drop a time range). Not
@@ -129,7 +129,6 @@ object DeleteWhere {
     val rowsDeleted = matchedPerFile.values.sum
     if (rowsDeleted == 0L)
       return Report(candidates.size, live.size, 0, 0L, totalLive, table.version)
-    val removeIds = hit.map(_.segmentId)
 
     // per-file degenerate handling: a hit file whose match count equals
     // its LIVE row count has NO survivors — drop it metadata-only (one
@@ -138,7 +137,7 @@ object DeleteWhere {
     // fully-matches a few files and grazes the rest; rewriting only the
     // grazed ones is the difference between touching the deleted range
     // and rewriting the table (round-2 finding). Fully-matched and
-    // partially-matched files still swap in ONE atomic commit (removeIds
+    // partially-matched files still swap in ONE atomic commit (`hit`
     // covers both).
     val (fullyMatched, partial) = hit.partition(seg =>
       // getOrElse: on the fallback path `hit` includes unattributed files
@@ -149,38 +148,32 @@ object DeleteWhere {
     // change feed: the deleted rows, staged pre-commit and carried in the
     // SAME commit (one extra matched-rows read of the hit files — cost
     // proportional to the delete, paid only when the feed is on). Row
-    // tracking: records carry the deleted row's `_row_id`.
-    val cdc: Seq[graft.log.LogAction.AddCdcFile] =
-      if (table.cdfEnabled)
-        table.stageCdc(liveRows(table.toLogical(cdcScanOf(spark, table, hit)), hit)
-          .where(matchesCond).withColumn("_change_type", lit("delete")))
-      else Nil
-
-    // the coverage recommit (time-series tables) is part of the SAME
-    // commit as the Remove/Add actions — no crash window can leave a
-    // stale snapshot rejecting appends into the vacated range
-    val repairCov = table.timeSpec.isDefined
-    val (newSegs, committedV) =
-      try {
-        if (partial.isEmpty)
-          (Nil, table.commitRemovals(removeIds, recomputeCoverage = repairCov,
-            extraActions = cdc))
+    // tracking: records carry the deleted row's `_row_id`. Time-series
+    // tables get their coverage recomputed in that commit too, so no crash
+    // window can leave a stale snapshot rejecting appends into the vacated
+    // range.
+    val (newSegs, committedV) = table.scoped { scope =>
+      val cdc =
+        if (table.cdfEnabled)
+          scope.stageCdc(liveRows(table.toLogical(cdcScanOf(spark, table, hit)), hit)
+            .where(matchesCond).withColumn("_change_type", lit("delete")))
+        else Nil
+      // row tracking: survivors keep their ids — the partial rewrite reads
+      // ids attached and materializes them into the new files (`_row_commit`
+      // keeps its old value too: surviving rows were NOT modified by this
+      // delete)
+      val segs =
+        if (partial.isEmpty) Nil
         else {
-          // row tracking: survivors keep their ids — the partial rewrite
-          // reads ids attached and materializes them into the new files
-          // (`_row_commit` keeps its old value too: surviving rows were
-          // NOT modified by this delete)
           val partialScan =
             if (table.rowTrackingEnabled) table.segmentScanWithRowIds(spark, partial)
             else table.segmentScan(spark, partial)
-          // `hit` (not just the rewritten partials): the swap must abort if
-          // ANY removed file was concurrently re-DV'd or rewritten
-          table.swapSegments(
-            liveRows(table.toLogical(partialScan), partial)
-              .where(keep), hit,
-            recomputeCoverage = repairCov, extraActions = cdc)
+          scope.stageSegments(liveRows(table.toLogical(partialScan), partial).where(keep))
         }
-      } catch { case e: Throwable => table.deleteCdcStaged(cdc); throw e }
+      // `hit` (not just the rewritten partials) as read: the commit aborts
+      // if ANY removed file was concurrently re-DV'd or rewritten
+      (segs, scope.commit()(_ => Change(removes = hit, adds = segs, actions = cdc)))
+    }
 
     Report(candidates.size, untouched.size + cleanCandidates.size, newSegs.size,
       rowsDeleted, totalLive - rowsDeleted, committedV, fullyMatched.size)
@@ -257,13 +250,14 @@ object DeleteWhere {
   }
 
   /** The driver-side outcome of a MOR matched-row pass, sidecars already
-    * written (caller owns `written` cleanup on abort): the DV upserts,
-    * the fully-matched removals, the OCC base expectation, and the
+    * written through the scope: the fully-matched removals and the DV
+    * upserts (each as read, so the commit can verify its base), and the
     * matched-row count. */
   private[maintain] final case class MorPlan(
-      upserts: Seq[SegmentMeta], removeIds: Seq[String],
-      expectedDv: Map[String, Option[String]], rowsMatched: Long,
-      written: Seq[String])
+      removes: Seq[SegmentMeta], upserts: Seq[(SegmentMeta, SegmentMeta)],
+      rowsMatched: Long) {
+    def change: Change = Change(removes = removes, upserts = upserts)
+  }
 
   /** Shared MOR tail (predicate and keyed deletes): aggregate `base`
     * — columns (__f file, __i position, __m matched, __b survivor bucket),
@@ -273,40 +267,35 @@ object DeleteWhere {
   private[maintain] def morAttach(spark: SparkSession, table: TsTable,
                                   candidates: Seq[SegmentMeta], untouchedCount: Int,
                                   totalLive: Long, base: DataFrame,
-                                  changeRows: Option[() => DataFrame] = None): Report = {
-    val plan = morCompute(spark, table, candidates, base).getOrElse(
-      return Report(candidates.size, untouchedCount + candidates.size, 0, 0L,
-        totalLive, table.version))
-    // change feed: the caller's deleted-rows thunk (one extra matched-rows
-    // read of the candidates), staged only when the feed is on and
-    // something actually matched, committed atomically with the DV attach
-    val cdc: Seq[graft.log.LogAction.AddCdcFile] =
-      if (table.cdfEnabled) changeRows.map(rows => table.stageCdc(
-        rows().withColumn("_change_type", lit("delete")))).getOrElse(Nil)
-      else Nil
-    try table.commitDvAttach(plan.upserts, plan.removeIds, plan.expectedDv,
-      recomputeCoverage = table.timeSpec.isDefined, extraActions = cdc)
-    catch {
-      case e: Throwable =>
-        table.deleteCdcStaged(cdc)
-        plan.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"${table.root}/$rel"))))
-        throw e
+                                  changeRows: Option[() => DataFrame] = None): Report =
+    table.scoped { scope =>
+      morCompute(spark, table, scope, candidates, base) match {
+        case None =>
+          Report(candidates.size, untouchedCount + candidates.size, 0, 0L, totalLive, table.version)
+        case Some(plan) =>
+          // change feed: the caller's deleted-rows thunk (one extra
+          // matched-rows read of the candidates), staged only when the feed
+          // is on and something actually matched, committed atomically
+          // with the DV attach
+          val cdc =
+            if (table.cdfEnabled) changeRows.map(rows => scope.stageCdc(
+              rows().withColumn("_change_type", lit("delete")))).getOrElse(Nil)
+            else Nil
+          scope.commit()(_ => plan.change.copy(actions = cdc))
+          val grazedCount = plan.upserts.size + plan.removes.size
+          Report(candidates.size, untouchedCount + (candidates.size - grazedCount), 0,
+            plan.rowsMatched, totalLive - plan.rowsMatched, table.version,
+            filesDroppedMetaOnly = plan.removes.size, dvAttached = plan.upserts.size)
+      }
     }
-    val grazedCount = plan.upserts.size + plan.removeIds.size
-    Report(candidates.size, untouchedCount + (candidates.size - grazedCount), 0,
-      plan.rowsMatched, totalLive - plan.rowsMatched, table.version,
-      filesDroppedMetaOnly = plan.removeIds.size, dvAttached = plan.upserts.size)
-  }
 
   /** The distributed half of a MOR pass: aggregate `base` into per-file
     * bitmaps, write DV (and survivor-coverage) sidecars, and return the
     * commit plan WITHOUT committing — [[morAttach]] commits it alone,
     * [[MergeInto.mergeMor]] commits it atomically with the appended
-    * replacement segments. None = no row matched. Sidecar writes that
-    * fail mid-loop are cleaned up here; after a Some return the CALLER
-    * owns `written` until its commit succeeds. */
-  private[maintain] def morCompute(spark: SparkSession, table: TsTable,
+    * replacement segments. None = no row matched. Sidecars are written
+    * through `scope`, which deletes them unless its commit lands them. */
+  private[maintain] def morCompute(spark: SparkSession, table: TsTable, scope: CommitScope,
                                    candidates: Seq[SegmentMeta],
                                    base: DataFrame): Option[MorPlan] = {
     import spark.implicits._
@@ -354,47 +343,34 @@ object DeleteWhere {
       .map(s => PathNorm.canonical(PathNorm.resolve(table.root, s.path)) -> s).toMap
     val commitId = java.util.UUID.randomUUID().toString.take(8)
     val repairCov = table.timeSpec.isDefined
-    val written = scala.collection.mutable.ArrayBuffer.empty[String] // abort cleanup
-    val removeIds = scala.collection.mutable.ArrayBuffer.empty[String]
-    val upserts = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
+    val removes = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
+    val upserts = scala.collection.mutable.ArrayBuffer.empty[(SegmentMeta, SegmentMeta)]
     var rowsMatched = 0L
-    try {
-      grazed.foreach { case (f, dvBytes, covBytes, m) =>
-        val seg = segByCanon.getOrElse(PathNorm.canonical(f),
-          throw new IllegalStateException(
-            s"cannot attribute $f to a candidate segment (exotic path scheme?); " +
-              "use the copy-on-write path for this table"))
-        rowsMatched += m
-        val newDv = Bitmap.deserialize(dvBytes)
-        val union = seg.dvPath
-          .map(p => DeletionVectors.readDv(PathNorm.resolve(table.root, p)).union(newDv))
-          .getOrElse(newDv)
-        if (union.cardinality == seg.rowCount) removeIds += seg.segmentId
-        else {
-          val dvRel = s"_dv/dv-${seg.segmentId}-$commitId.dv"
-          table.writeBytes(s"${table.root}/$dvRel", union.serialize())
-          written += dvRel
-          val covRel =
-            if (repairCov) {
-              val rel = s"_coverage/segments/segcov-${seg.segmentId}-$commitId.cov"
-              table.writeBytes(s"${table.root}/$rel", covBytes)
-              written += rel
-              Some(rel)
-            } else seg.coveragePath
-          upserts += seg.copy(dvPath = Some(dvRel), dvCardinality = union.cardinality,
-            coveragePath = covRel)
-        }
+    grazed.foreach { case (f, dvBytes, covBytes, m) =>
+      val seg = segByCanon.getOrElse(PathNorm.canonical(f),
+        throw new IllegalStateException(
+          s"cannot attribute $f to a candidate segment (exotic path scheme?); " +
+            "use the copy-on-write path for this table"))
+      rowsMatched += m
+      val newDv = Bitmap.deserialize(dvBytes)
+      val union = seg.dvPath
+        .map(p => DeletionVectors.readDv(PathNorm.resolve(table.root, p)).union(newDv))
+        .getOrElse(newDv)
+      if (union.cardinality == seg.rowCount) removes += seg
+      else {
+        val dvRel = s"_dv/dv-${seg.segmentId}-$commitId.dv"
+        scope.writeSidecar(dvRel, union.serialize())
+        val covRel =
+          if (repairCov) {
+            val rel = s"_coverage/segments/segcov-${seg.segmentId}-$commitId.cov"
+            scope.writeSidecar(rel, covBytes)
+            Some(rel)
+          } else seg.coveragePath
+        upserts += seg -> seg.copy(dvPath = Some(dvRel), dvCardinality = union.cardinality,
+          coveragePath = covRel)
       }
-    } catch {
-      case e: Throwable =>
-        written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"${table.root}/$rel"))))
-        throw e
     }
-    val expectedDv = grazed.map { case (f, _, _, _) =>
-      val seg = segByCanon(PathNorm.canonical(f)); seg.segmentId -> seg.dvPath
-    }.toMap
-    Some(MorPlan(upserts.toSeq, removeIds.toSeq, expectedDv, rowsMatched, written.toSeq))
+    Some(MorPlan(removes.toSeq, upserts.toSeq, rowsMatched))
   }
 
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {

@@ -3,7 +3,7 @@ package graft.maintain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.meta.{SegmentMeta, StatVal}
-import graft.table.{KeyBloom, TsTable}
+import graft.table.{Change, KeyBloom, TsTable}
 
 /** Catalyst-planned MERGE INTO (upsert) for revised sequences — new vs the
   * reference (north rule): copy-on-write over only the files whose key
@@ -138,9 +138,7 @@ object MergeInto {
       // BEFORE candidate selection: zero keys can match nothing, and
       // stat-less segments (always candidates, soundly) must not be
       // rewritten by a heartbeat batch
-      val v = txn.map { case (app, batch) => table.commitTxnOnly(app, batch) }
-        .getOrElse(table.version)
-      return Report(0, 0, 0, 0, 0, v)
+      return Report(0, 0, 0, 0, 0, table.commit(txn = txn)(_ => Change()))
     }
 
     val candidates = selectCandidates(spark, table, upd, updCount, key, live)
@@ -172,7 +170,7 @@ object MergeInto {
     // and nothing is cached. The 1-in-100 keys the anti-join removes and
     // the update rows it adds shift the sampled distribution marginally —
     // range bounds affect file balance only, never results.
-    val (added, mergedV) = try Compaction.withSizedReadSplits(spark, candBytes, candidates.size) { scoped =>
+    val (added, mergedV, landed) = Compaction.withSizedReadSplits(spark, candBytes, candidates.size) { scoped =>
       // the candidate read is created on the scoped session: split sizing
       // binds to the relation's session, so the tuned maxPartitionBytes
       // applies here and ONLY here (upd keeps the caller's session/conf)
@@ -223,18 +221,19 @@ object MergeInto {
               case None => Compaction.clusterSorted(toCluster, curve, outFiles, fit)
             }
           else Compaction.clusterSorted(toCluster, curve, outFiles, fit)
-        val cdc: Seq[graft.log.LogAction.AddCdcFile] =
-          if (table.cdfEnabled)
-            table.stageCdc(mergeCdc(scoped, table, candidates, upd, key))
-          else Nil
-        try table.swapSegments(clustered, candidates, txn = txn, extraActions = cdc)
-        catch { case e: Throwable => table.deleteCdcStaged(cdc); throw e }
+        table.scoped { scope =>
+          val cdc =
+            if (table.cdfEnabled) scope.stageCdc(mergeCdc(scoped, table, candidates, upd, key))
+            else Nil
+          val segs = scope.stageSegments(clustered)
+          val v = scope.commit(txn = txn)(_ => Change(removes = candidates, adds = segs, actions = cdc))
+          (segs, v, scope.landed)
+        }
       } finally if (needsCache) toCluster.unpersist(false)
-    } catch {
-      // replayed streaming batch: the swap already deleted its staged
-      // files; report the batch as applied at the watermark's version
-      case TsTable.TxnReplayed(v) => return Report(0, 0, 0, 0, 0, v)
     }
+    // replayed streaming batch: nothing landed (the scope deleted its
+    // staged files); report the batch as applied at the watermark's version
+    if (!landed) return Report(0, 0, 0, 0, 0, mergedV)
 
     // report math from metadata only: out = survivors + updCount
     val outRows = added.map(_.rowCount).sum
@@ -282,9 +281,8 @@ object MergeInto {
     val updCount = upd.count()
     if (updCount == 0) {
       // an empty streamed batch still advances the watermark (see merge)
-      val v = txn.map { case (app, batch) => table.commitTxnOnly(app, batch) }
-        .getOrElse(table.version)
-      return Report(0, 0, 0, 0, live.map(_.liveRowCount).sum, v)
+      return Report(0, 0, 0, 0, live.map(_.liveRowCount).sum,
+        table.commit(txn = txn)(_ => Change()))
     }
 
     // pin the update set to the TABLE schema (order + types) BEFORE any
@@ -304,6 +302,7 @@ object MergeInto {
 
     val candidates = selectCandidates(spark, table, upd, updCount, key, live, refineExact = false)
 
+    table.scoped { scope =>
     // matched-position pass (only when something can match)
     val plan: Option[DeleteWhere.MorPlan] =
       if (candidates.isEmpty) None
@@ -319,72 +318,51 @@ object MergeInto {
             .select(col("__f"), col("__i"),
               coalesce(col("__hit"), lit(false)).as("__m"), col("__b"))
         }
-        DeleteWhere.morCompute(spark, table, candidates, base)
+        DeleteWhere.morCompute(spark, table, scope, candidates, base)
       }
 
-    // everything after morCompute owns the plan's sidecars: ANY failure
-    // from here to the commit must delete them (and any staged segments)
-    var cdc: Seq[graft.log.LogAction.AddCdcFile] = Nil
-    def cleanup(staged: Seq[graft.meta.SegmentMeta]): Unit = {
-      table.deleteStaged(staged)
-      table.deleteCdcStaged(cdc)
-      plan.foreach(_.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(graft.meta.PathNorm.canonical(s"${table.root}/$rel")))))
-    }
-    var newSegs: Seq[graft.meta.SegmentMeta] = Nil
-    try {
-      // the update set as new clustered segments; sized like a small
-      // append (compaction bin-packs later) — never fewer files than
-      // cores would leave the cluster idle, never so many that tiny
-      // updates fragment
-      val updBytesEst = updCount * 4096L
-      val outFiles = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        math.ceil(updBytesEst.toDouble / targetFileSize).toInt * 4))
-      // row tracking: matched updates keep the masked row's id (one extra
-      // key+id column-pruned pass over the candidates — the same cost
-      // class as the matched-position pass); inserts carry NULL and mint
-      // fresh ids from the new segments' commit-assigned base. `_row_commit`
-      // NULL = this commit, via the new segments' rowVersion.
-      val toWrite =
-        if (!table.rowTrackingEnabled || candidates.isEmpty) pinned
-        else {
-          val raw = table.toLogical(table.segmentScanWithRowIds(spark, candidates))
-          val liveRows = graft.table.DeletionVectors.liveRowFilter(table.root, candidates)
-            .map(raw.where).getOrElse(raw)
-          val oldIds = liveRows.groupBy(col(key))
-            .agg(min(col(graft.table.RowTracking.RowIdCol))
-              .as(graft.table.RowTracking.RowIdCol))
-          pinned.join(oldIds, Seq(key), "left")
-            .withColumn(graft.table.RowTracking.RowCommitCol, lit(null).cast("long"))
-        }
-      newSegs = table.stageSegments(
-        Compaction.clusterSorted(toWrite, curve, outFiles, ClusterKey.fitFor(table)))
-      if (table.cdfEnabled)
-        cdc = table.stageCdc(mergeCdc(spark, table, candidates, pinned, key))
-      plan match {
-        case Some(p) =>
-          table.commitDvAttach(p.upserts, p.removeIds, p.expectedDv,
-            recomputeCoverage = table.timeSpec.isDefined, adds = newSegs,
-            sparkForChecks = Some(spark), txn = txn, extraActions = cdc)
-        case None =>
-          // pure insert: no matched rows anywhere — commit just the adds
-          table.commitDvAttach(Nil, Nil, Map.empty,
-            recomputeCoverage = table.timeSpec.isDefined, adds = newSegs,
-            sparkForChecks = Some(spark), txn = txn, extraActions = cdc)
+    // the update set as new clustered segments; sized like a small
+    // append (compaction bin-packs later) — never fewer files than
+    // cores would leave the cluster idle, never so many that tiny
+    // updates fragment
+    val updBytesEst = updCount * 4096L
+    val outFiles = math.max(1, math.min(spark.sparkContext.defaultParallelism,
+      math.ceil(updBytesEst.toDouble / targetFileSize).toInt * 4))
+    // row tracking: matched updates keep the masked row's id (one extra
+    // key+id column-pruned pass over the candidates — the same cost
+    // class as the matched-position pass); inserts carry NULL and mint
+    // fresh ids from the new segments' commit-assigned base. `_row_commit`
+    // NULL = this commit, via the new segments' rowVersion.
+    val toWrite =
+      if (!table.rowTrackingEnabled || candidates.isEmpty) pinned
+      else {
+        val raw = table.toLogical(table.segmentScanWithRowIds(spark, candidates))
+        val liveRows = graft.table.DeletionVectors.liveRowFilter(table.root, candidates)
+          .map(raw.where).getOrElse(raw)
+        val oldIds = liveRows.groupBy(col(key))
+          .agg(min(col(graft.table.RowTracking.RowIdCol))
+            .as(graft.table.RowTracking.RowIdCol))
+        pinned.join(oldIds, Seq(key), "left")
+          .withColumn(graft.table.RowTracking.RowCommitCol, lit(null).cast("long"))
       }
-    } catch {
-      // replayed streaming batch: delete this attempt's unreferenced
-      // segments + sidecars and report the batch as already-applied
-      case TsTable.TxnReplayed(v) =>
-        cleanup(newSegs)
-        return Report(0, 0, 0, 0, live.map(_.liveRowCount).sum, v)
-      case e: Throwable => cleanup(newSegs); throw e
+    val newSegs = scope.stageSegments(
+      Compaction.clusterSorted(toWrite, curve, outFiles, ClusterKey.fitFor(table)))
+    val cdc =
+      if (table.cdfEnabled) scope.stageCdc(mergeCdc(spark, table, candidates, pinned, key))
+      else Nil
+    // no plan = pure insert: no matched rows anywhere, just the adds
+    val v = scope.commit(txn = txn)(_ =>
+      plan.fold(Change())(_.change).copy(adds = newSegs, actions = cdc))
+    // a replayed streaming batch lands nothing (the scope deleted this
+    // attempt's segments and sidecars): report it as already-applied
+    if (!scope.landed) Report(0, 0, 0, 0, live.map(_.liveRowCount).sum, v)
+    else {
+      val matched = plan.map(_.rowsMatched).getOrElse(0L)
+      val survivors = live.map(_.liveRowCount).sum - matched
+      Report(candidates.size, newSegs.size, matched, updCount - matched,
+        survivors, table.version)
     }
-
-    val matched = plan.map(_.rowsMatched).getOrElse(0L)
-    val survivors = live.map(_.liveRowCount).sum - matched
-    Report(candidates.size, newSegs.size, matched, updCount - matched,
-      survivors, table.version)
+    }
     } finally upd.unpersist(false)
   }
 

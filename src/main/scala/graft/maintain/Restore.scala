@@ -3,7 +3,7 @@ package graft.maintain
 import java.nio.file.{Files, Paths}
 import graft.log.TableState
 import graft.meta.PathNorm
-import graft.table.TsTable
+import graft.table.{Change, TsTable}
 
 /** RESTORE TABLE … TO VERSION — roll the live set back to an earlier
   * snapshot as a NEW commit (Delta RESTORE / Iceberg rollback analog; the
@@ -67,8 +67,22 @@ object Restore {
     val removed = before.count(s => !targetIds.get(s.segmentId).contains(s))
     val rowsBefore = before.map(_.liveRowCount).sum
 
-    val v = table.commitRestore(targetSegs,
-      recomputeCoverage = table.timeSpec.isDefined)
+    // the diff is recomputed INSIDE the commit loop, so a rebase retry
+    // reconciles against the state it actually commits over: a live id
+    // absent from the target is removed, a live id whose meta differs (e.g.
+    // a deletion vector attached since) is upserted back to the target's
+    // SegmentMeta (sidecar pointers included), a target id absent from the
+    // live set is re-added, identical id+meta stays untouched
+    val targetById = targetSegs.map(s => s.segmentId -> s).toMap
+    require(targetById.size == targetSegs.size,
+      "target snapshot has duplicate segment ids — corrupt manifest?")
+    val v = table.commit() { st =>
+      val live = st.liveSegments
+      Change(
+        removes = live.filterNot(s => targetById.contains(s.segmentId)),
+        upserts = live.flatMap(s => targetById.get(s.segmentId).filter(_ != s).map(s -> _)),
+        adds = targetSegs.filterNot(s => st.segments.contains(s.segmentId)))
+    }
     Report(toVersion, added, removed, rowsBefore,
       targetSegs.map(_.liveRowCount).sum, v)
   }

@@ -3,7 +3,7 @@ package graft.maintain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.meta.{ColStats, PathNorm, StatVal}
-import graft.table.{DeletionVectors, RowTracking, TsTable}
+import graft.table.{Change, DeletionVectors, RowTracking, TsTable}
 
 /** Maintenance by ROW IDENTITY — the operators row tracking unlocks.
   * A change-feed consumer (or any revision pipeline) that knows WHICH
@@ -165,56 +165,41 @@ object RowIdOps {
       val del = pinned.where(col(RowId).isNotNull).select(col(RowId))
       val (candidates, filteredOpt) =
         if (live.isEmpty) (Nil, None) else idMatchBase(spark, table, del, live)
-      val plan = filteredOpt.flatMap(f => DeleteWhere.morCompute(spark, table, candidates, f))
-
-      var cdc: Seq[graft.log.LogAction.AddCdcFile] = Nil
-      var newSegs: Seq[graft.meta.SegmentMeta] = Nil
-      def cleanup(): Unit = {
-        table.deleteStaged(newSegs); table.deleteCdcStaged(cdc)
-        plan.foreach(_.written.foreach(rel => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(PathNorm.canonical(s"${table.root}/$rel")))))
-      }
-      try {
+      table.scoped { scope =>
+        val plan = filteredOpt.flatMap(f => DeleteWhere.morCompute(spark, table, scope, candidates, f))
         // images land as new clustered segments: revised rows KEEP their
         // materialized id; inserts (NULL) mint from the commit's base
         val images = pinned.withColumn(
           RowTracking.RowCommitCol, lit(null).cast("long"))
         val outFiles = math.max(1, math.min(spark.sparkContext.defaultParallelism,
           math.ceil((cnt * 4096L).toDouble / targetFileSize).toInt * 4))
-        newSegs = table.stageSegments(
+        val newSegs = scope.stageSegments(
           Compaction.clusterSorted(images, curve, outFiles, ClusterKey.fitFor(table)))
-        if (table.cdfEnabled) {
-          val pre =
-            if (candidates.isEmpty) None
-            else Some({
-              val raw = table.toLogical(DeleteWhere.cdcScanOf(spark, table, candidates))
-              DeletionVectors.liveRowFilter(table.root, candidates)
-                .map(raw.where).getOrElse(raw)
-                .join(del, Seq(RowId), "left_semi")
-                .withColumn("_change_type", lit("update_pre"))
-            })
-          val post = pinned.where(col(RowId).isNotNull)
-            .withColumn("_change_type", lit("update_post"))
-          val ins = pinned.where(col(RowId).isNull)
-            .withColumn("_change_type", lit("insert"))
-          cdc = table.stageCdc(pre.fold(post.unionByName(ins))(
-            _.unionByName(post).unionByName(ins)))
-        }
-        plan match {
-          case Some(p) =>
-            table.commitDvAttach(p.upserts, p.removeIds, p.expectedDv,
-              recomputeCoverage = false, adds = newSegs,
-              sparkForChecks = Some(spark), extraActions = cdc)
-          case None =>
-            table.commitDvAttach(Nil, Nil, Map.empty,
-              recomputeCoverage = false, adds = newSegs,
-              sparkForChecks = Some(spark), extraActions = cdc)
-        }
-      } catch { case e: Throwable => cleanup(); throw e }
+        val cdc =
+          if (!table.cdfEnabled) Nil
+          else {
+            val pre =
+              if (candidates.isEmpty) None
+              else Some({
+                val raw = table.toLogical(DeleteWhere.cdcScanOf(spark, table, candidates))
+                DeletionVectors.liveRowFilter(table.root, candidates)
+                  .map(raw.where).getOrElse(raw)
+                  .join(del, Seq(RowId), "left_semi")
+                  .withColumn("_change_type", lit("update_pre"))
+              })
+            val post = pinned.where(col(RowId).isNotNull)
+              .withColumn("_change_type", lit("update_post"))
+            val ins = pinned.where(col(RowId).isNull)
+              .withColumn("_change_type", lit("insert"))
+            scope.stageCdc(pre.fold(post.unionByName(ins))(
+              _.unionByName(post).unionByName(ins)))
+          }
+        scope.commit()(_ => plan.fold(Change())(_.change).copy(adds = newSegs, actions = cdc))
 
-      val matched = plan.map(_.rowsMatched).getOrElse(0L)
-      MergeInto.Report(candidates.size, newSegs.size, matched, cnt - matched,
-        live.map(_.liveRowCount).sum - matched, table.version)
+        val matched = plan.map(_.rowsMatched).getOrElse(0L)
+        MergeInto.Report(candidates.size, newSegs.size, matched, cnt - matched,
+          live.map(_.liveRowCount).sum - matched, table.version)
+      }
     } finally pinned.unpersist(false)
   }
 }

@@ -61,7 +61,7 @@ object StreamingUpsert {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // empty batches still advance the watermark inside mergeMor/merge
-        // (commitTxnOnly), mirroring the append sink — no pre-flight job
+        // (a txn-only commit), mirroring the append sink — no pre-flight job
         val txn = Some((app, batchId))
         retryingAborts(5) {
           if (mor) MergeInto.mergeMor(batch.sparkSession, table, batch, key, txn = txn)

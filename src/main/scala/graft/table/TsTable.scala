@@ -1,7 +1,6 @@
 package graft.table
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -21,94 +20,47 @@ import graft.scan.TsFileIndex
   * and O(files); every data-plane operation (stats, coverage construction,
   * rewrite, scan) is a distributed Spark job. Readers are snapshot-isolated:
   * `scan` captures CURRENT once and then touches only immutable files.
+  *
+  * Writers land through ONE commit scope ([[CommitScope]]): each verb
+  * stages its files through the scope, describes its effect as a
+  * [[Change]] (removes, DV upserts, adds, extra actions) and commits it,
+  * with an optional streaming txn, through the single OCC primitive,
+  * which applies every guard (txn replay, live-under-the-same-DV, CHECK
+  * re-gate, coverage recompute) in one place. Whatever the scope staged
+  * that the landed commit does not reference is deleted when the scope
+  * closes.
   */
 final class TsTable private (val root: String, val store: LogStore) {
 
   @volatile private var cachedState: TableState = TableState.rebuild(store)
 
-  /** Serializes intra-process validate+commit critical sections (see
-    * occLoop) — the in-JVM half of the Delta-style "lock locally,
-    * OCC globally" commit discipline. */
-  private val commitLock = new Object
+  /** Serializes intra-process validate+commit critical sections — the
+    * in-JVM half of the Delta-style "lock locally, OCC globally" commit
+    * discipline ([[CommitScope.commit]]). */
+  private[table] val commitLock = new Object
 
   def state: TableState = cachedState
   def version: Long = cachedState.version
 
-  /** The shared OCC commit loop EVERY writer verb goes through. `body`
-    * validates against the refreshed snapshot, assembles actions, and
-    * commits via [[commitAndAdvance]] (throw to abort; retryable commit
-    * races surface as Conflict/CommitFileExists). The whole
-    * validate+commit section runs under [[commitLock]], so in-JVM writers
-    * (e.g. 4 concurrent compaction bins + an append + a MOR delete on one
-    * table instance) serialize instead of burning each other's OCC retry
-    * budgets on pure self-races. Cross-process losers rebase-retry with
-    * jittered backoff OUTSIDE the lock. Slow abort cleanup (staged-file
-    * deletion) belongs in the CALLER's catch, outside the lock. */
-  private def occLoop(maxRetries: Int)(body: TableState => Long): Long = {
-    var attempt = 0
-    while (true) {
-      val res: Option[Long] = commitLock.synchronized {
-        refresh()
-        try Some(body(cachedState))
-        catch {
-          case _: ConflictException | _: CommitFileExistsException if attempt < maxRetries =>
-            attempt += 1; None
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => Thread.sleep(5L + scala.util.Random.nextInt(25 * attempt))
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  /** Run one writer verb inside a [[CommitScope]]: it stages through the
+    * scope and lands through [[CommitScope.commit]]; on exit, every file
+    * the scope wrote that its landed commit does not reference is deleted. */
+  private[graft] def scoped[A](body: CommitScope => A): A = {
+    val scope = new CommitScope(this)
+    try body(scope) finally scope.close()
   }
 
-  /** Commit `actions` over snapshot `st` and advance the cached state.
-    * The monotonic guard makes the assignment safe even if a future
-    * caller commits outside [[commitLock]]: a slow writer's post-commit
-    * assignment can never regress a newer snapshot already visible to
-    * readers. Returns the committed version. */
-  private def commitAndAdvance(st: TableState, actions0: Seq[LogAction]): Long = {
-    val actions = assignRowTracking(st, actions0)
-    val v = store.commitWithExpectedVersion(st.version, actions)
-    val ns = actions.foldLeft(st)(_ apply _).copy(version = v)
+  /** A commit that stages nothing (metadata, txn watermark, restore,
+    * branch publish): [[CommitScope.commit]] in a scope of its own. */
+  private[graft] def commit(maxRetries: Int = 3, txn: Option[(String, Long)] = None)
+                           (change: TableState => Change): Long =
+    scoped(_.commit(maxRetries, txn)(change))
+
+  /** Advance the cached state to a just-committed snapshot. The monotonic
+    * guard keeps a slow writer's post-commit assignment from regressing a
+    * newer snapshot already visible to readers. */
+  private[table] def advance(ns: TableState): Unit =
     if (ns.version > cachedState.version) cachedState = ns
-    v
-  }
-
-  /** Row-tracking id allocation — the ONE commit-time hook every writer
-    * verb funnels through (append, swap, DV attach, restore, publish,
-    * merge). Each AddSegment that carries no baseRowId yet (fresh
-    * append/rewrite output) is assigned `[hw, hw + rowCount)` plus
-    * `rowVersion = this commit's version`; DV re-attach and RESTORE
-    * re-adds COPY their SegmentMeta and thus keep their ranges untouched.
-    * The bumped high-water mark rides the SAME commit (reusing the
-    * commit's own UpdateTableMeta when it carries one). Runs inside the
-    * OCC loop, so a rebase re-assigns from the new snapshot's high water —
-    * two racing appends can never mint overlapping id ranges. Pure
-    * metadata: no data file is read or written here. */
-  private def assignRowTracking(st: TableState, actions: Seq[LogAction]): Seq[LogAction] = {
-    // honor the POST-commit flag: the enabling commit backfills its own adds
-    val metaIdx = actions.lastIndexWhere(_.isInstanceOf[LogAction.UpdateTableMeta])
-    val effMeta =
-      if (metaIdx >= 0) actions(metaIdx).asInstanceOf[LogAction.UpdateTableMeta].meta
-      else st.tableMeta.orNull
-    if (effMeta == null || !effMeta.rowTracking) return actions
-    var hw = math.max(effMeta.rowIdHighWater,
-      st.tableMeta.map(_.rowIdHighWater).getOrElse(0L))
-    val v = st.version + 1
-    var assigned = false
-    val out = actions.map {
-      case LogAction.AddSegment(s) if s.baseRowId.isEmpty =>
-        val b = hw; hw += s.rowCount; assigned = true
-        LogAction.AddSegment(s.copy(baseRowId = Some(b), rowVersion = Some(v)))
-      case a => a
-    }
-    if (!assigned) return actions
-    val newMeta = effMeta.copy(rowIdHighWater = hw)
-    if (metaIdx >= 0) out.updated(metaIdx, LogAction.UpdateTableMeta(newMeta))
-    else out :+ LogAction.UpdateTableMeta(newMeta)
-  }
 
   /** Reload state only if CURRENT advanced (reference table.rs:205-251). */
   def refresh(): Boolean = {
@@ -355,21 +307,17 @@ final class TsTable private (val root: String, val store: LogStore) {
     *    bench scale, restoring parity with the pre-compaction layout).
     *    Scale-independent: intra-file parallelism at ANY cluster size
     *    (a 512 MB production file gets 64 independently scannable groups);
-    *    cost measured +1 % file bytes. Override via
-    *    SPARK_GRAFT_ROWGROUP_BYTES. */
-  private[graft] def segmentWriteOptions: Map[String, String] = {
-    val rowGroupBytes = sys.env.getOrElse("SPARK_GRAFT_ROWGROUP_BYTES",
-      (8L * 1024 * 1024).toString)
+    *    cost measured +1 % file bytes. */
+  private[graft] def segmentWriteOptions: Map[String, String] =
     Map(
       "compression" -> "zstd",
-      "parquet.block.size" -> rowGroupBytes) ++
+      "parquet.block.size" -> (8L * 1024 * 1024).toString) ++
     (clusterSpec.map(_.columns.last) match {
       case Some(key) => Map(
         s"parquet.bloom.filter.enabled#$key" -> "true",
         "parquet.bloom.filter.adaptive.enabled" -> "true")
       case None => Map.empty
     })
-  }
 
   /** The column KeyBloom pruning can test, when blooms are being written. */
   private[graft] def bloomKeyColumn: Option[String] = clusterSpec.map(_.columns.last)
@@ -396,19 +344,6 @@ final class TsTable private (val root: String, val store: LogStore) {
       refresh()
       if (cachedState.txns.get(app).exists(_ >= batch)) return cachedState.version
     }
-    val spark = df.sparkSession
-    val commitId = UUID.randomUUID().toString.take(8)
-    val stagingRel = s".staging-$commitId"
-    val stagingAbs = s"$root/$stagingRel"
-
-    // liveness beacon: keeps the staging tree's mtime fresh for the whole
-    // write-stats-coverage-commit span, so Expire's crashed-writer
-    // reclamation can never race a live append whose upstream stages
-    // outlast the grace period
-    val heartbeat = StagingHeartbeat.start(stagingAbs)
-    try {
-
-    // (1) write data files once; all retries below are metadata-only.
     // toPhysical: appended data arrives under LOGICAL names; files are
     // written under the frozen physical names (identity unless renamed).
     // The rename is by-name, so a stale writer still using a PHYSICAL
@@ -423,142 +358,48 @@ final class TsTable private (val root: String, val store: LogStore) {
           s"append columns ${off.mkString(", ")} are not in the table's logical schema " +
             s"(renamed columns must use their CURRENT names: ${colMap.keys.mkString(", ")})")
     }
-    toPhysical(df).write.options(segmentWriteOptions).mode("overwrite").parquet(stagingAbs)
-    val written0 = listParquet(stagingAbs)
-
-    // (2) per-file stats from footers only — no data scan. Empty input is
-    // a successful NO-OP (zero-row part files are discarded, never
-    // committed as segments); a streaming txn batch still advances its
-    // watermark so replays of the empty batch stay idempotent — this is
-    // what lets the streaming sinks hand every batch straight to append
-    // without a pre-flight isEmpty job.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statsAll = FooterStats.readAll(conf, written0)
-    val (liveStats, emptyStats) = statsAll.partition(_._2.rowCount > 0)
-    emptyStats.foreach(f => Files.deleteIfExists(Paths.get(stripScheme(f._1))))
-    if (liveStats.isEmpty) {
-      // stop (join) the beacon BEFORE deleting its tree: a touch racing
-      // the recursive delete could recreate .heartbeat mid-walk and make
-      // the final dir delete throw (stop() is idempotent; the finally
-      // re-stop is a no-op)
-      heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      return txn match {
-        case Some((app, batch)) => commitTxnOnly(app, batch)
-        case None => refresh(); cachedState.version
-      }
+    scoped { scope =>
+      val staged = stageAppend(scope, df)
+      scope.commit(maxRetries, txn)(st => appendChange(scope, st, staged))
     }
-    val written = liveStats.map(_._1)
-    val fileStats = liveStats
+  }
 
-    // CHECK constraints gate the append while the files are still in
-    // staging — a rejected batch deletes its scratch tree and commits
-    // nothing (stats fast path; see enforceChecks)
-    try enforceChecks(spark, fileStats.map { case (p, fs) => (p, fs.stats, fs.rowCount) })
-    catch { case e: Throwable =>
-      heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      throw e
-    }
-
+  /** An append's data half: write the segments once (all commit retries
+    * are metadata-only), footer stats, CHECK gate, coverage sidecars, and
+    * the disk schema + entity identity its commit enforces. None for empty
+    * input — a successful NO-OP whose commit still advances a streaming
+    * txn's watermark, so replays of the empty batch stay idempotent (this
+    * is what lets the streaming sinks hand every batch straight to append
+    * without a pre-flight isEmpty job). */
+  private[graft] def stageAppend(scope: CommitScope, df: DataFrame): Option[TsTable.StagedAppend] = {
+    val spark = df.sparkSession
+    val files = scope.stage(df, "data/", segmentWriteOptions)
+    if (files.isEmpty) return None
+    val segs = scope.segmentsOf(df, files)
+    val paths = segs.map(s => s"$root/${s.path}")
     // canonical on-disk schema (reference adopts from the Parquet footer,
-    // append.rs:130-151). Round 6: Spark embeds the exact StructType JSON
-    // in the footer metadata of every file it writes, and the footers were
-    // just read for stats — reuse that instead of paying a listing + a
-    // schema-inference Spark job per append (driver-tail cost on EVERY
-    // append; the fallback read covers foreign files staged without the
-    // key, and any malformed JSON falls through to inference too)
+    // append.rs:130-151): Spark embeds the exact StructType JSON in the
+    // footer of every file it writes, and the footers were just read for
+    // stats — no schema-inference job (the fallback read covers foreign
+    // files without the key, and malformed JSON falls through to it too).
     // asNullable: file sources report every field nullable, so the
     // embedded writer schema must be normalized identically or the
     // adopt-then-enforce comparison would reject a second append whose
     // builder pipeline produced non-null columns (e.g. generator kernels)
-    val diskSchema = liveStats.head._2.sparkSchemaJson
+    val diskSchema = files.head._2.sparkSchemaJson
       .flatMap(j => scala.util.Try(org.apache.spark.sql.graft.Bridge.asNullable(
         org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])).toOption)
-      .getOrElse(spark.read.parquet(stagingAbs).schema)
-
-    // (3) time-series extras: coverage bitmaps + entity identity
-    val tsExtras = timeSpec.map { spec =>
-      val tsCol = spec.timestampColumn
-      if (!diskSchema.fieldNames.contains(tsCol))
-        throw SchemaMismatchException(s"time column '$tsCol' missing from appended data")
-      val identity = extractEntityIdentity(spark, stagingAbs, spec, fileStats)
-      val perFileCov = computeCoverage(spark, Seq(stagingAbs), spec)
-      (identity, perFileCov)
-    }
-
-    // move staged files into data/ under deterministic names
-    val moved: Seq[(String, String)] = written.zipWithIndex.map { case (src, i) =>
-      val rel = f"data/$commitId-$i%05d.parquet"
-      val dst = s"$root/$rel"
-      Files.createDirectories(Paths.get(s"$root/data"))
-      Files.move(Paths.get(stripScheme(src)), Paths.get(stripScheme(dst)))
-      src -> rel
-    }
-    // stop (join) the beacon before deleting its tree — a touch racing the
-    // recursive delete could recreate .heartbeat mid-walk, fail the dir
-    // delete, and abort an append whose data files are already in data/
-    heartbeat.stop()
-    deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-
-    val segs = moved.zip(fileStats).map { case ((src, rel), (_, fs)) =>
-      val segId = SegmentMeta.segmentIdV1(rel, Paths.get(stripScheme(s"$root/$rel")))
-      val cov = tsExtras.flatMap(_._2.get(graft.meta.PathNorm.canonical(src))).map { bm =>
-        val covRel = s"_coverage/segments/segcov-$segId.cov"
-        writeBytes(s"$root/$covRel", bm.serialize())
-        covRel
-      }
-      SegmentMeta(segId, rel, "parquet", fs.rowCount, Some(fs.fileSize), fs.stats, cov)
-    }
-
-    // checks were enforced against THIS snapshot's constraint set while
-    // the files sat in staging; a rebase below may land on a snapshot
-    // with a check added since, and must re-gate the (now-moved) files
-    val checksValidated = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
-
-    def deleteSegFiles(): Unit = segs.foreach { seg =>
-      Files.deleteIfExists(Paths.get(stripScheme(s"$root/${seg.path}")))
-      seg.coveragePath.foreach(cp =>
-        Files.deleteIfExists(Paths.get(stripScheme(s"$root/$cp"))))
-    }
-    try {
-      occLoop(maxRetries) { st =>
-        if (st.tableMeta.map(_.checks).getOrElse(Nil) != checksValidated)
-          enforceChecks(spark, segs.map(s => (s"$root/${s.path}", s.stats, s.rowCount)))
-        // authoritative idempotency check against the snapshot we commit
-        // on; the sentinel unwinds to the cleanup below, OUTSIDE the lock
-        txn.foreach { case (app, batch) =>
-          if (st.txns.get(app).exists(_ >= batch)) throw TsTable.TxnReplayed(st.version)
-        }
-        commitAppend(spark, st, segs, diskSchema, tsExtras, txn)
-      }
-    } catch {
-      case TsTable.TxnReplayed(v) =>
-        // A replay (e.g. two drivers raced the same batch and this one
-        // lost the OCC commit) must delete the data files it already
-        // moved into data/ — no commit references them, and Expire only
-        // reclaims segments the log has seen, so they would leak forever.
-        deleteSegFiles()
-        v
-      case e: Throwable =>
-        // Non-retryable rejection (CoverageOverlap / SchemaMismatch /
-        // EntityIdentity / uncovered-segments precondition) or retry
-        // budget exhausted: same leak rule as above (round-2 finding).
-        deleteSegFiles()
-        throw e
-    }
-
-    } finally heartbeat.stop()
+      .getOrElse(spark.read.parquet(paths: _*).schema)
+    val identity = timeSpec.flatMap(spec => extractEntityIdentity(spark, paths, spec, files.map(_._2)))
+    Some(TsTable.StagedAppend(segs, diskSchema, identity))
   }
 
-  private def commitAppend(
-      spark: SparkSession,
-      st: TableState,
-      segs: Seq[SegmentMeta],
-      diskSchema: StructType,
-      tsExtras: Option[(Option[Map[String, String]], Map[String, Bitmap])],
-      txn: Option[(String, Long)] = None): Long = {
-
+  /** An append's commit over `st`: schema adopt-or-enforce, entity
+    * identity pin-or-enforce, and for time-series tables the coverage
+    * overlap check plus the new table-coverage snapshot. */
+  private[graft] def appendChange(scope: CommitScope, st: TableState,
+                                  staged: Option[TsTable.StagedAppend]): Change = {
+    val a = staged.getOrElse(return Change())
     var m = st.tableMeta.getOrElse(meta)
     var metaChanged = false
 
@@ -569,15 +410,15 @@ final class TsTable private (val root: String, val store: LogStore) {
     // (identity when colMap is empty — adoption always happens pre-rename)
     m.schema match {
       case None =>
-        m = m.copy(schemaJson = Some(diskSchema.json)); metaChanged = true
+        m = m.copy(schemaJson = Some(a.diskSchema.json)); metaChanged = true
       case Some(existing) =>
-        if (m.physicalize(existing) != diskSchema)
+        if (m.physicalize(existing) != a.diskSchema)
           throw SchemaMismatchException(
-            s"schema mismatch: table has ${existing.simpleString}, append has ${diskSchema.simpleString}")
+            s"schema mismatch: table has ${existing.simpleString}, append has ${a.diskSchema.simpleString}")
     }
 
     // entity identity pin-or-enforce (reference append.rs:166-196)
-    tsExtras.flatMap(_._1).foreach { identity =>
+    a.identity.foreach { identity =>
       m.entityIdentity match {
         case None =>
           m = m.copy(entityIdentity = Some(identity)); metaChanged = true
@@ -588,8 +429,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     }
 
     // coverage overlap check + new table snapshot (reference append.rs:200-290)
-    val coverageAction = tsExtras.map { case (_, perFile) =>
-      val spec = timeSpec.get
+    val coverageAction = timeSpec.map { spec =>
       // precondition: every existing segment must carry a coverage sidecar,
       // else the overlap check would be unsound (reference append.rs:50-61)
       val uncovered = st.liveSegments.filter(_.coveragePath.isEmpty)
@@ -597,25 +437,15 @@ final class TsTable private (val root: String, val store: LogStore) {
         throw new IllegalStateException(
           s"cannot append: ${uncovered.size} existing segments lack coverage sidecars")
       val tableCov = loadTableCoverage(st, heal = false)
-      val appendCov = perFile.values.foldLeft(Bitmap.empty)(_ union _)
+      val appendCov = scope.coverageOf(a.segs)
       val overlap = appendCov.intersect(tableCov)
       if (!overlap.isEmpty)
-        throw CoverageOverlapException(segs.head.path, overlap.cardinality, overlap.runList.head._1)
-      val newCov = tableCov.union(appendCov)
-      val newVersion = st.version + 1
-      val covRel = s"_coverage/table/$newVersion-tblcov-${UUID.randomUUID().toString.take(8)}.cov"
-      writeBytes(s"$root/$covRel", newCov.serialize())
-      LogAction.UpdateTableCoverage(spec.bucket.spec, covRel)
+        throw CoverageOverlapException(a.segs.head.path, overlap.cardinality, overlap.runList.head._1)
+      scope.coverageAction(st, spec, tableCov.union(appendCov))
     }
 
-    val actions: Seq[LogAction] =
-      (if (metaChanged) Seq(LogAction.UpdateTableMeta(m)) else Nil) ++
-      segs.map(LogAction.AddSegment) ++ coverageAction.toSeq ++
-      txn.map { case (app, batch) => LogAction.SetTxn(app, batch) }.toSeq
-
-    // through commitAndAdvance so the row-tracking hook stamps the new
-    // segments' id ranges in the same commit
-    commitAndAdvance(st, actions)
+    Change(adds = a.segs,
+      actions = (if (metaChanged) Seq(LogAction.UpdateTableMeta(m)) else Nil) ++ coverageAction.toSeq)
   }
 
   /** Append an existing Parquet file by path (reference CLI `append
@@ -665,150 +495,6 @@ final class TsTable private (val root: String, val store: LogStore) {
     // caller's files and are left alone)
   }
 
-  /** Copy-on-write swap: write `df` as new segments and atomically commit
-    * RemoveSegment(removeIds) + AddSegment(new) in ONE commit — the
-    * maintenance primitive behind compaction, clustering and MERGE.
-    * Concurrent readers pinned at the old version keep seeing the old
-    * files (nothing is deleted here; snapshot expiration deletes later).
-    * OCC: on conflict, rebase and re-verify every removed id is still
-    * live — if another job already swapped one, this swap aborts. */
-  /** When `recomputeCoverage` (DELETE on a time-series table): the new
-    * table-coverage snapshot (union of surviving + new segment sidecars)
-    * commits ATOMICALLY with the Remove+Add actions, so no crash window
-    * can leave a stale snapshot that falsely rejects later appends into
-    * the vacated range. Orphan .cov files from lost OCC races are benign
-    * (same policy as append's pre-commit sidecar writes). */
-  private[graft] def swapSegments(df: DataFrame, removed: Seq[SegmentMeta],
-                                  maxRetries: Int = 3,
-                                  recomputeCoverage: Boolean = false,
-                                  txn: Option[(String, Long)] = None,
-                                  extraActions: Seq[LogAction] = Nil): (Seq[SegmentMeta], Long) = {
-    val spark = df.sparkSession
-    val checksValidated = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
-    val removeIds = removed.map(_.segmentId)
-    val expectedDv = removed.map(s => s.segmentId -> s.dvPath).toMap
-    val segs = stageSegments(df)
-    // same orphan rule as append: the rewritten files were moved into
-    // data/ above, so every abort path (lost race on a removed segment,
-    // retry budget exhausted, rejected re-gate) must delete them + their
-    // sidecars before propagating — no commit references them and
-    // Expire's orphan scan only reclaims log-seen segments. The cleanup
-    // runs in the catch below, OUTSIDE the commit lock, so a large
-    // aborting swap never stalls other writers' sub-ms commits.
-    try {
-      // The expensive rewrite job already ran OUTSIDE the lock; the rare
-      // re-gate of a concurrently-added CHECK is the only data-touching
-      // work that can run under it.
-      val v = occLoop(maxRetries) { st =>
-        // streaming-upsert idempotency (mirrors append): a replayed batch
-        // unwinds to the cleanup catch below, outside the commit lock
-        txn.foreach { case (app, batch) =>
-          if (st.txns.get(app).exists(_ >= batch)) throw TsTable.TxnReplayed(st.version)
-        }
-        val missing = removeIds.filterNot(st.segments.contains)
-        if (missing.nonEmpty)
-          throw new IllegalStateException(
-            s"swap aborted: segments already rewritten by a concurrent job: $missing")
-        // a concurrent MOR delete keeps the segment ID but changes its
-        // deletion vector — committing this rewrite (whose bytes were read
-        // under the OLD DV) would silently resurrect the just-deleted rows,
-        // so the swap verifies the DV pointer it read under, not mere id
-        // presence (the mirror of commitDvAttach's expectedDv guard)
-        val dvRaced = removeIds.filter(id => st.segments(id).dvPath != expectedDv(id))
-        if (dvRaced.nonEmpty)
-          throw new IllegalStateException(
-            s"swap aborted: segments re-DV'd by a concurrent DELETE/MERGE: $dvRaced")
-        // a CHECK added since this rewrite validated must re-gate it (the
-        // staged rows could predate the constraint); unchanged checks skip
-        if (st.tableMeta.map(_.checks).getOrElse(Nil) != checksValidated)
-          enforceChecks(spark, segs.map(s => (s"$root/${s.path}", s.stats, s.rowCount)))
-        val actions: Seq[LogAction] =
-          removeIds.map(LogAction.RemoveSegment) ++ segs.map(LogAction.AddSegment) ++
-            (if (recomputeCoverage) coverageActionFor(st, removeIds, segs).toSeq else Nil) ++
-            txn.map { case (app, batch) => LogAction.SetTxn(app, batch) }.toSeq ++
-            extraActions // change-feed records / DataNeutral marker ride the same commit
-        commitAndAdvance(st, actions)
-      }
-      (segs, v)
-    } catch { case e: Throwable => deleteStaged(segs); throw e }
-  }
-
-  /** Write `df` as new committed-ready segments under data/ (staging dir,
-    * zero-row parts discarded, footer stats, coverage sidecars for
-    * time-series tables) and return their metas. NO log commit happens
-    * here: the caller commits the AddSegments (swapSegments, mergeMor) and
-    * owns [[deleteStaged]] cleanup on every abort path — until the commit
-    * lands these files are unreferenced orphans invisible to readers. */
-  private[graft] def stageSegments(df: DataFrame): Seq[SegmentMeta] = {
-    val spark = df.sparkSession
-    val commitId = UUID.randomUUID().toString.take(8)
-    val stagingAbs = s"$root/.staging-$commitId"
-    // same liveness beacon as append: a long rewrite must not lose its
-    // staging tree to a concurrent Expire's crashed-writer reclamation
-    val heartbeat = StagingHeartbeat.start(stagingAbs)
-    try {
-      // toPhysical: rewrite inputs arrive physical (segmentScan) or
-      // logical (a maintenance op that applied user expressions); the
-      // rename is by-name, so a physical frame passes through untouched
-      // and a logical one lands under the files' frozen physical names
-      toPhysical(df).write.options(segmentWriteOptions).mode("overwrite").parquet(stagingAbs)
-      val written0 = listParquet(stagingAbs)
-      val conf = spark.sparkContext.hadoopConfiguration
-      // zero-row part files (a rewrite partition whose every row was
-      // filtered away) are DISCARDED like the append path does — committing
-      // one would create a rowCount=0 segment with no coverage sidecar,
-      // which wedges the time-series append precondition forever. An
-      // all-empty rewrite degenerates to a pure-Remove commit.
-      val statsAll = FooterStats.readAll(conf, written0)
-      val (liveOut, emptyOut) = statsAll.partition(_._2.rowCount > 0)
-      emptyOut.foreach(f => Files.deleteIfExists(Paths.get(stripScheme(f._1))))
-      val written = liveOut.map(_._1)
-      val fileStats = liveOut
-      val moved = written.zipWithIndex.map { case (src, i) =>
-        val rel = f"data/$commitId-$i%05d.parquet"
-        Files.createDirectories(Paths.get(s"$root/data"))
-        Files.move(Paths.get(stripScheme(src)), Paths.get(stripScheme(s"$root/$rel")))
-        rel
-      }
-      // same beacon-before-delete ordering as append (see there)
-      heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      // time-series tables: rewritten segments need coverage sidecars so the
-      // append overlap-check precondition keeps holding after compaction
-      val covByPath: Map[String, String] = timeSpec match {
-        case Some(spec) if moved.nonEmpty =>
-          computeCoverage(spark, moved.map(rel => s"$root/$rel"), spec).map { case (p, bm) =>
-            val rel = p.stripPrefix(graft.meta.PathNorm.canonical(root) + "/")
-            val segId = SegmentMeta.segmentIdV1(rel, Paths.get(p))
-            val covRel = s"_coverage/segments/segcov-$segId.cov"
-            writeBytes(s"$root/$covRel", bm.serialize())
-            rel -> covRel
-          }
-        case _ => Map.empty
-      }
-      val segs = moved.zip(fileStats).map { case (rel, (_, fs)) =>
-        val segId = SegmentMeta.segmentIdV1(rel, Paths.get(stripScheme(s"$root/$rel")))
-        SegmentMeta(segId, rel, "parquet", fs.rowCount, Some(fs.fileSize), fs.stats,
-          covByPath.get(rel))
-      }
-      // CHECK constraints also gate rewrites/merge-adds staged here: the
-      // stats fast path clears pass-through rewrites (existing rows were
-      // validated at their own write), and it is the only net that can
-      // catch an UPDATE whose SET drives rows out of bounds
-      try enforceChecks(spark, segs.map(s => (s"$root/${s.path}", s.stats, s.rowCount)))
-      catch { case e: Throwable => deleteStaged(segs); throw e }
-      segs
-    } finally heartbeat.stop()
-  }
-
-  /** Delete staged-but-uncommitted segments (+ sidecars) after an abort. */
-  private[graft] def deleteStaged(segs: Seq[SegmentMeta]): Unit =
-    segs.foreach { seg =>
-      Files.deleteIfExists(Paths.get(stripScheme(s"$root/${seg.path}")))
-      seg.coveragePath.foreach(cp =>
-        Files.deleteIfExists(Paths.get(stripScheme(s"$root/$cp"))))
-    }
-
   // ------------------------------------------------------ change data feed
 
   /** Whether row-changing writers record a change feed (TableMeta flag). */
@@ -841,9 +527,9 @@ final class TsTable private (val root: String, val store: LogStore) {
     * column names. */
   def enableRowTracking(maxRetries: Int = 3): Long = {
     requireMainHandle("enable row tracking")
-    occLoop(maxRetries) { st =>
+    commit(maxRetries) { st =>
       val m = st.tableMeta.getOrElse(throw CorruptLogException("table has no metadata"))
-      if (m.rowTracking) st.version
+      if (m.rowTracking) Change()
       else {
         m.schema.foreach { s =>
           val clash = s.fieldNames.toSet
@@ -851,10 +537,11 @@ final class TsTable private (val root: String, val store: LogStore) {
           if (clash.nonEmpty) throw SchemaMismatchException(
             s"row tracking reserves column names ${clash.mkString(", ")}")
         }
+        // verbatim re-adds (not `adds`): the commit hook stamps their id
+        // ranges; they are neither fresh data nor a coverage change
         val backfill: Seq[LogAction] =
           st.liveSegments.filter(_.baseRowId.isEmpty).map(LogAction.AddSegment)
-        commitAndAdvance(st,
-          backfill :+ LogAction.UpdateTableMeta(m.copy(rowTracking = true)))
+        Change(actions = backfill :+ LogAction.UpdateTableMeta(m.copy(rowTracking = true)))
       }
     }
   }
@@ -957,50 +644,13 @@ final class TsTable private (val root: String, val store: LogStore) {
   /** Maintenance read of `segs` with tracking columns attached and
     * MATERIALIZED (physical names; rows physical — callers layer DV
     * filters as with [[segmentScan]]). Row-preserving rewrites feed this
-    * straight to [[stageSegments]], freezing each surviving row's id and
-    * last-modified version into the new files. */
+    * straight to [[CommitScope.stageSegments]], freezing each surviving
+    * row's id and last-modified version into the new files. */
   private[graft] def segmentScanWithRowIds(spark: SparkSession,
                                            segs: Seq[SegmentMeta]): DataFrame = {
     val m = cachedState.tableMeta.getOrElse(throw CorruptLogException("table has no metadata"))
     RowTracking.attach(segmentScanTracked(spark, segs, m), root, segs)
   }
-
-  /** Stage a change-record DataFrame (logical table columns +
-    * `_change_type`) as parquet under `_cdc/` and return the AddCdcFile
-    * actions the caller must carry in the SAME commit as the change —
-    * exactly the staged-then-committed discipline of [[stageSegments]],
-    * without footer-stats/coverage/check machinery (the feed is not
-    * scannable table state). Until that commit lands the files are
-    * unreferenced; the caller owns [[deleteCdcStaged]] on every abort path
-    * (Expire's unreferenced-sweep is the crashed-writer backstop). */
-  private[graft] def stageCdc(df: DataFrame): Seq[LogAction.AddCdcFile] = {
-    val commitId = UUID.randomUUID().toString.take(8)
-    val stagingAbs = s"$root/.staging-cdc-$commitId"
-    val heartbeat = StagingHeartbeat.start(stagingAbs)
-    try {
-      // physical column names on disk, like the data files — the feed
-      // reader maps back through the read-time column mapping, so a CDC
-      // file written before a RENAME still reads under the new name
-      toPhysical(df).write.mode("overwrite").parquet(stagingAbs)
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val stats = FooterStats.readAll(conf, listParquet(stagingAbs))
-      val (live, empty) = stats.partition(_._2.rowCount > 0)
-      empty.foreach(f => Files.deleteIfExists(Paths.get(stripScheme(f._1))))
-      Files.createDirectories(Paths.get(stripScheme(s"$root/_cdc")))
-      val actions = live.zipWithIndex.map { case ((src, fs), i) =>
-        val rel = f"_cdc/cdc-$commitId-$i%05d.parquet"
-        Files.move(Paths.get(stripScheme(src)), Paths.get(stripScheme(s"$root/$rel")))
-        LogAction.AddCdcFile(rel, fs.rowCount)
-      }
-      heartbeat.stop()
-      deleteRecursively(Paths.get(stripScheme(stagingAbs)))
-      actions
-    } finally heartbeat.stop()
-  }
-
-  /** Abort cleanup for [[stageCdc]] output whose commit never landed. */
-  private[graft] def deleteCdcStaged(actions: Seq[LogAction.AddCdcFile]): Unit =
-    actions.foreach(a => Files.deleteIfExists(Paths.get(stripScheme(s"$root/${a.path}"))))
 
   /** CHECK constraint: add an ingest-quality gate (name → SQL predicate)
     * as a metadata-only commit. SQL CHECK semantics: a row passes when
@@ -1239,7 +889,9 @@ final class TsTable private (val root: String, val store: LogStore) {
     val head = bl.currentVersion()
     val headState = TableState.rebuildAt(bl, head)
     val baseState = TableState.rebuildAt(store, bl.base)
-    val committed = occLoop(maxRetries) { st =>
+    // the net effect rides verbatim: fast-forward (below) is the guard,
+    // and the branch already validated, covered and gated what it wrote
+    val committed = commit(maxRetries) { st =>
       if (st.version != bl.base)
         throw new IllegalStateException(
           s"non-fast-forward publish: branch '$name' forked at v${bl.base} but main " +
@@ -1261,8 +913,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       headState.txns.toSeq.sortBy(_._1).foreach { case (app, batch) =>
         if (baseState.txns.get(app).forall(_ < batch)) b += LogAction.SetTxn(app, batch)
       }
-      val actions = b.result()
-      if (actions.isEmpty) st.version else commitAndAdvance(st, actions)
+      Change(actions = b.result())
     }
     if (dropAfter) dropBranch(name)
     committed
@@ -1292,13 +943,10 @@ final class TsTable private (val root: String, val store: LogStore) {
     * rebase-retry on conflicts. */
   private def commitMetaUpdate(maxRetries: Int = 3)
                               (f: (TableState, TableMeta) => Option[TableMeta]): Long =
-    occLoop(maxRetries) { st =>
+    commit(maxRetries) { st =>
       val m = st.tableMeta.getOrElse(throw new IllegalStateException(
         "no table metadata yet — create the table first"))
-      f(st, m) match {
-        case None     => st.version
-        case Some(nm) => commitAndAdvance(st, Seq(LogAction.UpdateTableMeta(nm)))
-      }
+      Change(actions = f(st, m).map(LogAction.UpdateTableMeta).toSeq)
     }
 
   /** Drop a CHECK constraint (metadata-only). */
@@ -1308,16 +956,15 @@ final class TsTable private (val root: String, val store: LogStore) {
       Some(m.copy(checks = m.checks.filterNot(_._1 == name)))
     }
 
-  /** Enforce the table's CHECK constraints over freshly staged files.
+  /** Enforce CHECK constraints `checks` over freshly staged files.
     * Stats fast path, sound by the Tri algebra's one reliable direction:
     * eval(NOT check) == AlwaysFalse over a file's footer stats means NO
     * row makes the predicate FALSE (TRUE or NULL both pass, per SQL
     * CHECK), so the file skips the row-level scan — on appends of clean
     * data with tight stats this costs driver arithmetic only. Files the
     * stats can't clear get ONE filtered count over just those files. */
-  private def enforceChecks(spark: SparkSession,
-                            files: Seq[(String, Map[String, graft.meta.ColStats], Long)]): Unit = {
-    val checks = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
+  private[table] def enforceChecks(spark: SparkSession, checks: Seq[(String, String)],
+                                   files: Seq[(String, Map[String, graft.meta.ColStats], Long)]): Unit = {
     if (checks.isEmpty || files.isEmpty) return
     import org.apache.spark.sql.functions.{expr, lit, not}
     checks.foreach { case (name, sql) =>
@@ -1603,131 +1250,6 @@ final class TsTable private (val root: String, val store: LogStore) {
       }
     }
 
-  /** Watermark-only commit for an empty streaming batch: the (app, batch)
-    * txn advances with no segments, so a replay of the empty batch is
-    * still recognized as already-applied. */
-  private[graft] def commitTxnOnly(app: String, batch: Long, maxRetries: Int = 3): Long =
-    occLoop(maxRetries) { st =>
-      if (st.txns.get(app).exists(_ >= batch)) st.version
-      else commitAndAdvance(st, Seq(LogAction.SetTxn(app, batch)))
-    }
-
-  /** Metadata-only removal commit (DELETE WHERE whose candidates all
-    * matched): RemoveSegment actions (plus an atomic coverage recommit for
-    * time-series tables), OCC with rebase-retry; aborts if a concurrent
-    * job already rewrote one of the segments. */
-  private[graft] def commitRemovals(removeIds: Seq[String], maxRetries: Int = 3,
-                                    recomputeCoverage: Boolean = false,
-                                    extraActions: Seq[LogAction] = Nil): Long =
-    occLoop(maxRetries) { st =>
-      val missing = removeIds.filterNot(st.segments.contains)
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"remove aborted: segments already rewritten by a concurrent job: $missing")
-      commitAndAdvance(st, removeIds.map(LogAction.RemoveSegment) ++
-        (if (recomputeCoverage) coverageActionFor(st, removeIds, Nil).toSeq else Nil) ++
-        extraActions)
-    }
-
-  /** Merge-on-read DELETE commit: upsert `upserts` (same segment ids, new
-    * dvPath/dvCardinality/coveragePath) and drop `removeIds` (files whose
-    * every live row matched), atomically. Each upsert is emitted as
-    * RemoveSegment + AddSegment — state-wise a plain upsert, but the
-    * Remove makes the commit a data-change commit, which the streaming
-    * source already skips (TableStreamSource skipChangeCommits): a DV
-    * attach must never re-emit rows a stream has delivered.
-    *
-    * OCC: rebase-retry on version conflicts, but ABORT if any affected
-    * segment was concurrently rewritten or re-DV'd — the caller's bitmaps
-    * were unioned against `expectedDv` and would silently drop that
-    * writer's deletes if applied over a different base. */
-  private[graft] def commitDvAttach(upserts: Seq[SegmentMeta], removeIds: Seq[String],
-                                    expectedDv: Map[String, Option[String]],
-                                    maxRetries: Int = 3,
-                                    recomputeCoverage: Boolean = false,
-                                    adds: Seq[SegmentMeta] = Nil,
-                                    sparkForChecks: Option[SparkSession] = None,
-                                    txn: Option[(String, Long)] = None,
-                                    extraActions: Seq[LogAction] = Nil): Long = {
-    val affected = upserts.map(_.segmentId) ++ removeIds
-    val checksValidated = cachedState.tableMeta.map(_.checks).getOrElse(Nil)
-    occLoop(maxRetries) { st =>
-      // streaming-upsert idempotency (mirrors append): a replayed batch
-      // unwinds to the CALLER's cleanup catch, outside the commit lock
-      txn.foreach { case (app, batch) =>
-        if (st.txns.get(app).exists(_ >= batch)) throw TsTable.TxnReplayed(st.version)
-      }
-      // re-gate appended segments if a CHECK landed since they were staged
-      // (upserts/removes reference rows that were already committed-valid)
-      if (adds.nonEmpty && sparkForChecks.isDefined &&
-          st.tableMeta.map(_.checks).getOrElse(Nil) != checksValidated)
-        enforceChecks(sparkForChecks.get,
-          adds.map(a => (s"$root/${a.path}", a.stats, a.rowCount)))
-      val missing = affected.filterNot(st.segments.contains)
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"DV attach aborted: segments already rewritten by a concurrent job: $missing")
-      val rebased = affected.filter(id => st.segments(id).dvPath != expectedDv(id))
-      if (rebased.nonEmpty)
-        throw new IllegalStateException(
-          s"DV attach aborted: segments re-DV'd by a concurrent DELETE: $rebased")
-      commitAndAdvance(st,
-        (removeIds ++ upserts.map(_.segmentId)).map(LogAction.RemoveSegment) ++
-          (upserts ++ adds).map(LogAction.AddSegment) ++
-          (if (recomputeCoverage)
-            coverageActionFor(st, affected, upserts ++ adds).toSeq else Nil) ++
-          txn.map { case (app, batch) => LogAction.SetTxn(app, batch) }.toSeq ++
-          extraActions)
-    }
-  }
-
-  /** RESTORE commit: make the live set equal `targetSegs` (an earlier
-    * version's snapshot) as a NEW data-change commit — history is never
-    * rewritten, so concurrent readers keep snapshot isolation and the
-    * restore itself is time-travelable / restorable-away. The diff against
-    * the current state is recomputed INSIDE the OCC loop, so a rebase
-    * retry reconciles against the state it actually commits over:
-    *  - live id absent from target (or present with different meta, e.g. a
-    *    deletion vector attached since) → RemoveSegment;
-    *  - target segment absent from live (or differing) → AddSegment
-    *    (re-add of the original SegmentMeta, sidecar pointers included);
-    *  - identical id+meta → untouched.
-    * Time-series tables get coverage recomputed in the same commit. */
-  private[graft] def commitRestore(targetSegs: Seq[SegmentMeta], maxRetries: Int = 3,
-                                   recomputeCoverage: Boolean = false): Long = {
-    val targetById = targetSegs.map(s => s.segmentId -> s).toMap
-    require(targetById.size == targetSegs.size,
-      "target snapshot has duplicate segment ids — corrupt manifest?")
-    occLoop(maxRetries) { st =>
-      val live = st.liveSegments
-      val liveById = live.map(s => s.segmentId -> s).toMap
-      val removes = live.filterNot(s => targetById.get(s.segmentId).contains(s))
-        .map(_.segmentId)
-      val adds = targetSegs.filterNot(s => liveById.get(s.segmentId).contains(s))
-      if (removes.isEmpty && adds.isEmpty) st.version // already there
-      else commitAndAdvance(st,
-        removes.map(LogAction.RemoveSegment) ++ adds.map(LogAction.AddSegment) ++
-          (if (recomputeCoverage) coverageActionFor(st, removes, adds).toSeq else Nil))
-    }
-  }
-
-  /** Coverage snapshot for the state AFTER removing `removeIds` and adding
-    * `added`: union of the surviving + new segments' sidecars, written as
-    * a fresh sidecar whose pointer action commits WITH the swap. None for
-    * non-time-series tables. */
-  private def coverageActionFor(st: TableState, removeIds: Seq[String],
-                                added: Seq[SegmentMeta]): Option[LogAction] = {
-    val spec = timeSpec.getOrElse(return None)
-    val removed = removeIds.toSet
-    val survivors = st.liveSegments.filterNot(s => removed(s.segmentId))
-    val cov = (survivors ++ added).flatMap(_.coveragePath).foldLeft(Bitmap.empty) { (acc, rel) =>
-      acc.union(Bitmap.deserialize(Files.readAllBytes(Paths.get(stripScheme(s"$root/$rel")))))
-    }
-    val covRel = s"_coverage/table/${st.version + 1}-tblcov-${UUID.randomUUID().toString.take(8)}.cov"
-    writeBytes(s"$root/$covRel", cov.serialize())
-    Some(LogAction.UpdateTableCoverage(spec.bucket.spec, covRel))
-  }
-
   /** Per-file coverage bitmaps — ONE distributed job that never ships raw
     * (file, bucket) rows to the driver: each partition folds its rows into
     * per-file distinct-bucket sets and emits them as serialized partial
@@ -1739,7 +1261,7 @@ final class TsTable private (val root: String, val store: LogStore) {
     * driver cost is O(files × runs), runs-compressed. Bucket id =
     * floorDiv(epochSeconds, len) with pre-epoch clamp to 0, matching
     * BucketMath / the reference's release-mode clamp (bucket.rs:66-75). */
-  private def computeCoverage(spark: SparkSession, paths: Seq[String],
+  private[table] def computeCoverage(spark: SparkSession, paths: Seq[String],
                               spec: TimeIndexSpec): Map[String, Bitmap] = {
     import spark.implicits._
     val lenSec = spec.bucket.lengthSeconds
@@ -1795,11 +1317,11 @@ final class TsTable private (val root: String, val store: LogStore) {
     * constant), falling back to a distinct().limit(2) scan — the same
     * two-tier scheme as the reference (formats/parquet/entity_identity.rs). */
   private def extractEntityIdentity(
-      spark: SparkSession, stagingAbs: String, spec: TimeIndexSpec,
-      fileStats: Seq[(String, FooterStats.FileStats)]): Option[Map[String, String]] = {
+      spark: SparkSession, paths: Seq[String], spec: TimeIndexSpec,
+      fileStats: Seq[FooterStats.FileStats]): Option[Map[String, String]] = {
     if (spec.entityColumns.isEmpty) return None
     val identity = spec.entityColumns.map { c =>
-      val perFile = fileStats.map(_._2.stats.get(c))
+      val perFile = fileStats.map(_.stats.get(c))
       val fast = perFile.forall {
         case Some(ColStats(Some(StatVal.S(mn)), Some(StatVal.S(mx)), nulls)) => mn == mx && nulls == 0
         case _ => false
@@ -1808,7 +1330,7 @@ final class TsTable private (val root: String, val store: LogStore) {
       if (fast && perFile.flatMap(_.flatMap(_.min)).distinct.size == 1) {
         c -> headVal.get.asInstanceOf[StatVal.S].v
       } else {
-        val d = spark.read.parquet(stagingAbs).select(col(c)).distinct().limit(2).collect()
+        val d = spark.read.parquet(paths: _*).select(col(c)).distinct().limit(2).collect()
         if (d.length != 1) throw EntityIdentityException(
           s"entity column '$c' must have exactly one value across the appended segment, found ${d.length}")
         if (d(0).isNullAt(0)) throw EntityIdentityException(s"entity column '$c' is null")
@@ -1874,16 +1396,6 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   // --------------------------------------------------------------- utils
 
-  private def listParquet(dir: String): Seq[String] = {
-    val d = Paths.get(stripScheme(dir))
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(d)
-    try s.iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
-    finally s.close()
-  }
-
   private[graft] def writeBytes(path: String, bytes: Array[Byte]): Unit = {
     val p = Paths.get(stripScheme(path))
     Files.createDirectories(p.getParent)
@@ -1894,30 +1406,19 @@ final class TsTable private (val root: String, val store: LogStore) {
     if (p.startsWith("file:")) new java.net.URI(p).getPath else p
 
   /** Canonical local path for matching input_file_name() URIs against
-    * staging paths: input_file_name yields "file:///abs/x" while staging
+    * staged paths: input_file_name yields "file:///abs/x" while staged
     * paths can be RELATIVE (a CLI `--table ./events` root) — bare scheme
     * stripping would never match those, committing time-series segments
     * without coverage sidecars and wedging later appends. PathNorm
     * absolutizes + normalizes both producers. */
   private def normalizeFileUri(p: String): String = graft.meta.PathNorm.canonical(p)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.foreach(deleteRecursively) }
-      finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
 }
 
 object TsTable {
-  /** Unwinds a writer verb's txn-idempotency early exit out of
-    * [[TsTable.occLoop]] so staged-file cleanup runs outside the commit
-    * lock. Carries the version the watermark was already at — the verb
-    * (append, MERGE) catches this, deletes its unreferenced files, and
-    * reports the batch as already-applied. */
-  private[graft] final case class TxnReplayed(version: Long) extends RuntimeException
+  /** An append's staged segments plus the on-disk schema and entity
+    * identity its commit adopts or enforces. */
+  private[graft] final case class StagedAppend(segs: Seq[SegmentMeta], diskSchema: StructType,
+                                               identity: Option[Map[String, String]])
 
   /** Bootstrap: verify version==0, commit v1 = UpdateTableMeta
     * (reference table.rs:156-202). */

@@ -318,7 +318,7 @@ class StreamingSpec extends SparkFunSuite {
     // simulate a pre-upgrade table: batches 0..1 recorded under the RAW
     // file:-URI key (what the old appId produced for URI checkpoints)
     val legacyKey = "stream:" + ckptUri
-    t.commitTxnOnly(legacyKey, 1L)
+    t.commit(txn = Some((legacyKey, 1L)))(_ => graft.table.Change())
     val newKey = StreamingIngest.appId(ckptUri)
     assert(newKey != legacyKey, "fixture must exercise the spelling change")
 
@@ -341,7 +341,7 @@ class StreamingSpec extends SparkFunSuite {
     val root2 = tmpDir("stream-legacy2")
     val t2 = TsTable.create(root2, tokenMeta)
     val ckpt2 = tmpDir("stream-legacy2-ckpt")
-    t2.commitTxnOnly("stream:file:" + ckpt2, 1L)
+    t2.commit(txn = Some(("stream:file:" + ckpt2, 1L)))(_ => graft.table.Change())
     val mem2 = MemoryStream[Tok]
     mem2.addData(rows)
     StreamingIngest.ingestAvailable(mem2.toDF(), t2, ckpt2) // bare-path spelling

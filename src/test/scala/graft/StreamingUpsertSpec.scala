@@ -6,7 +6,7 @@ import graft.data.TokenGen
 import graft.meta._
 import graft.maintain.MergeInto
 import graft.streaming.{StreamingIngest, StreamingUpsert}
-import graft.table.TsTable
+import graft.table.{Change, TsTable}
 
 /** Streaming CDC upsert: micro-batches land as transactional merges,
   * exactly-once under batch replay (same watermark discipline as
@@ -134,26 +134,32 @@ class StreamingUpsertSpec extends SparkFunSuite {
     val root = tmpDir("upsert-replay")
     val t = TsTable.create(root, tokenMeta)
     t.append(TokenGen.generate(spark, 100, numFiles = 2))
-    t.commitTxnOnly("stream:x", 5L)
+    t.commit(txn = Some(("stream:x", 5L)))(_ => Change())
     val v = t.version
     val before = dataFiles(root)
 
-    // copy-on-write swap: staged files must be GONE after the unwind
+    // copy-on-write swap: staged files must be GONE once its scope closes
     val seg = t.state.liveSegments.head
-    val e1 = intercept[TsTable.TxnReplayed] {
-      t.swapSegments(t.scan(spark).where(col("doc_id") < id(50)), Seq(seg),
-        txn = Some(("stream:x", 5L)))
+    val (v1, landed1) = t.scoped { s =>
+      val added = s.stageSegments(t.scan(spark).where(col("doc_id") < id(50)))
+      assert(dataFiles(root) != before, "fixture must stage files")
+      (s.commit(txn = Some(("stream:x", 5L)))(_ =>
+        Change(removes = Seq(seg), adds = added)), s.landed)
     }
-    assert(e1.version == v)
+    assert(v1 == v && !landed1)
     assert(dataFiles(root) == before, "aborted swap leaked staged segments")
 
-    // DV attach: the sentinel reaches the caller (mergeMor's catch owns
-    // the sidecar + staged-adds cleanup)
-    val e2 = intercept[TsTable.TxnReplayed] {
-      t.commitDvAttach(Nil, Nil, Map.empty,
-        adds = Nil, sparkForChecks = Some(spark), txn = Some(("stream:x", 3L)))
+    // DV attach: the replay reaches the caller's scope, which owns (and
+    // deletes) the sidecar the attach staged
+    val dvRel = "_dv/dv-replayed.dv"
+    val (v2, landed2) = t.scoped { s =>
+      s.writeSidecar(dvRel, Array[Byte](1))
+      (s.commit(txn = Some(("stream:x", 3L)))(_ =>
+        Change(upserts = Seq(seg -> seg.copy(dvPath = Some(dvRel))))), s.landed)
     }
-    assert(e2.version == v)
+    assert(v2 == v && !landed2)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, dvRel)),
+      "replayed DV attach leaked its sidecar")
     assert(t.version == v, "replayed commits must not advance the log")
   }
 }

@@ -227,11 +227,15 @@ class TsTableSpec extends SparkFunSuite {
     val seg = t1.state.liveSegments.head
     val t2 = TsTable.open(root) // second writer, same snapshot
     // writer 1 rewrites the segment first
-    t1.swapSegments(t1.scan(spark), Seq(seg))
+    def swap(t: TsTable, df: org.apache.spark.sql.DataFrame): Long = t.scoped { s =>
+      val added = s.stageSegments(df)
+      s.commit()(_ => graft.table.Change(removes = Seq(seg), adds = added))
+    }
+    swap(t1, t1.scan(spark))
     val filesAfterT1 = count(s"$root/data")
     // writer 2 still believes seg is live; its swap must abort AND clean up
     val e = intercept[IllegalStateException](
-      t2.swapSegments(spark.read.parquet(s"$root/${seg.path}"), Seq(seg)))
+      swap(t2, spark.read.parquet(s"$root/${seg.path}")))
     assert(e.getMessage.contains("swap aborted"), e.getMessage)
     assert(count(s"$root/data") == filesAfterT1,
       "aborted swap leaked its rewritten files into data/")
