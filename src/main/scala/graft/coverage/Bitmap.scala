@@ -3,9 +3,13 @@ package graft.coverage
 import scala.collection.mutable.ArrayBuffer
 
 /** A sorted-runs bitmap over the non-negative Int domain (u32-analog),
-  * replacing the reference's RoaringBitmap (coverage.rs:48-57) — Roaring is
-  * not on the Spark classpath, so we implement a tiny run-length set with
-  * identical set semantics. Runs are inclusive `[start, end]`, sorted,
+  * standing in for the reference's RoaringBitmap (coverage.rs:48-57) with
+  * identical set semantics. RoaringBitmap itself ships in Spark's jars (a
+  * spark-core dependency); we keep this run-length set because its
+  * serialized bytes ([[serialize]]) ARE the sidecar format — every
+  * coverage and deletion-vector sidecar a table holds is written in it, so
+  * switching to Roaring would mean a new on-disk format and a migration.
+  * Runs are inclusive `[start, end]`, sorted,
   * non-adjacent, non-overlapping. All ops are O(runs), and coverage domains
   * are small (bucket ids), so this is driver-friendly even at 100 TB: the
   * bitmap size scales with *time span / bucket*, not data volume.
@@ -13,6 +17,8 @@ import scala.collection.mutable.ArrayBuffer
 final class Bitmap private (private val runs: Array[(Int, Int)]) extends Serializable {
 
   def runList: Seq[(Int, Int)] = runs.toSeq
+
+  def runCount: Int = runs.length
 
   def isEmpty: Boolean = runs.isEmpty
 

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
 import org.apache.spark.sql.functions._
-import graft.coverage.Bitmap
+import graft.coverage.{Bitmap, CoverageAccumulator}
 import graft.meta.{PathNorm, SegmentMeta}
 import graft.scan.StatsPruning
-import graft.table.{BucketDomainOverflowException, Change, CommitScope, DeletionVectors, TsTable}
+import graft.table.{Change, CommitScope, DeletionVectors, TsTable}
 
 /** DELETE WHERE — predicate delete, the training-data governance operator
   * (redact contaminated documents, strip a source, drop a time range). Not
@@ -202,7 +202,7 @@ object DeleteWhere {
         col("_metadata.file_path").as("__f"),
         col("_metadata.row_index").as("__i"),
         matchesCond.as("__m"),
-        bucketExpr(table).as("__b")))
+        timeMicrosExpr(table).as("__t")))
     morAttach(spark, table, candidates, untouched.size, totalLive, base,
       changeRows = Some(() => {
         val raw = table.toLogical(cdcScanOf(spark, table, candidates))
@@ -222,20 +222,16 @@ object DeleteWhere {
         .drop(graft.table.RowTracking.RowCommitCol)
     else table.segmentScan(spark, segs)
 
-  /** Bucket id of a row for the coverage recompute — same arithmetic as
-    * the coverage builder (pre-epoch clamp, floor-div on the non-negative
-    * domain); null ts -> null bucket, which carries no coverage. Constant
-    * null for non-time-series tables. */
-  private[maintain] def bucketExpr(table: TsTable): Column = table.timeSpec match {
-    case Some(spec) =>
-      val len = spec.bucket.lengthSeconds
-      expr(s"greatest(unix_micros(CAST(`${spec.timestampColumn}` AS TIMESTAMP)), 0L) " +
-        s"div ${1000000L * len}L")
+  /** A row's time in epoch micros for the survivor-coverage recompute,
+    * which [[CoverageAccumulator]] buckets; null ts -> null, which carries
+    * no coverage. Constant null for non-time-series tables. */
+  private[maintain] def timeMicrosExpr(table: TsTable): Column = table.timeSpec match {
+    case Some(spec) => expr(s"unix_micros(CAST(`${spec.timestampColumn}` AS TIMESTAMP))")
     case None => lit(null).cast("long")
   }
 
   /** Candidate read for a MOR pass: `project` maps the raw candidate scan
-    * to the (__f, __i, __m, __b) shape, and candidates already carrying a
+    * to the (__f, __i, __m, __t) shape, and candidates already carrying a
     * DV are then read live-rows-only, so new positions never overlap the
     * existing bitmap and survivor coverage is exact by construction. */
   private[maintain] def morBase(spark: SparkSession, table: TsTable,
@@ -260,7 +256,7 @@ object DeleteWhere {
   }
 
   /** Shared MOR tail (predicate and keyed deletes): aggregate `base`
-    * — columns (__f file, __i position, __m matched, __b survivor bucket),
+    * — columns (__f file, __i position, __m matched, __t survivor time),
     * already live-row-filtered — into one DV bitmap + one survivor
     * coverage bitmap per grazed file, write the sidecars, and commit the
     * attach atomically (see object doc for the scale shape). */
@@ -299,28 +295,27 @@ object DeleteWhere {
                                    candidates: Seq[SegmentMeta],
                                    base: DataFrame): Option[MorPlan] = {
     import spark.implicits._
+    // only read when a row carries a time, i.e. on time-series tables
+    val bucketSeconds = table.timeSpec.map(_.bucket.lengthSeconds).getOrElse(1L)
     // (file, dvPartial, covPartial, matches): one emit per (split, file)
     val perFile = base.as[(String, Long, Boolean, Option[Long])]
       .mapPartitions { it =>
         val dv = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-        val cov = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.HashSet[Int]]
+        val cov = scala.collection.mutable.HashMap.empty[String, CoverageAccumulator]
         val matches = scala.collection.mutable.HashMap.empty[String, Long]
-        it.foreach { case (f, i, m, b) =>
+        it.foreach { case (f, i, m, t) =>
           if (m) {
             if (i > DeletionVectors.MaxRowsPerFile)
               throw new IllegalStateException(
                 s"row position $i exceeds the DV position domain in $f")
             dv.getOrElseUpdate(f, scala.collection.mutable.ArrayBuffer.empty) += i.toInt
             matches.update(f, matches.getOrElse(f, 0L) + 1L)
-          } else b.foreach { bb =>
-            if (bb > Int.MaxValue) throw BucketDomainOverflowException(bb)
-            cov.getOrElseUpdate(f, scala.collection.mutable.HashSet.empty) += bb.toInt
-          }
+          } else t.foreach(us => cov.getOrElseUpdate(f, new CoverageAccumulator(bucketSeconds)).add(us))
         }
         (dv.keySet ++ cov.keySet).iterator.map { f =>
           (f,
             dv.get(f).map(ps => Bitmap(ps).serialize()).orNull,
-            cov.get(f).map(bs => Bitmap(bs).serialize()).orNull,
+            cov.get(f).map(_.result().serialize()).orNull,
             matches.getOrElse(f, 0L))
         }
       }

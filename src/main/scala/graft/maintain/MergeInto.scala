@@ -313,10 +313,10 @@ object MergeInto {
               col("_metadata.file_path").as("__f"),
               col("_metadata.row_index").as("__i"),
               col(key),
-              DeleteWhere.bucketExpr(table).as("__b"))
+              DeleteWhere.timeMicrosExpr(table).as("__t"))
             .join(keysDf.withColumn("__hit", lit(true)), Seq(key), "left")
             .select(col("__f"), col("__i"),
-              coalesce(col("__hit"), lit(false)).as("__m"), col("__b"))
+              coalesce(col("__hit"), lit(false)).as("__m"), col("__t"))
         }
         DeleteWhere.morCompute(spark, table, scope, candidates, base)
       }
@@ -394,13 +394,13 @@ object MergeInto {
           col("_metadata.file_path").as("__f"),
           col("_metadata.row_index").as("__i"),
           col(key),
-          DeleteWhere.bucketExpr(table).as("__b"))
+          DeleteWhere.timeMicrosExpr(table).as("__t"))
         // LEFT join + hit flag = "key IS IN the delete set", evaluated
         // distributed (broadcast when the key set is small, shuffle
         // otherwise); NULL keys never match, matching MERGE ON semantics
         .join(del.withColumn("__hit", lit(true)), Seq(key), "left")
         .select(col("__f"), col("__i"),
-          coalesce(col("__hit"), lit(false)).as("__m"), col("__b"))
+          coalesce(col("__hit"), lit(false)).as("__m"), col("__t"))
     }
     DeleteWhere.morAttach(spark, table, candidates,
       live.size - candidates.size, totalLive, base,

@@ -68,7 +68,7 @@ object RowIdOps {
 
   /** The id-addressed match base shared by the id verbs: candidates by
     * manifest interval intersection, then a `(file, pos, matched=true,
-    * bucket=null)` frame — the positional arm a zero-read broadcast
+    * time=null)` frame — the positional arm a zero-read broadcast
     * interval join, the materialized arm one id-column-pruned scan,
     * already-masked positions excluded. None when nothing can match. */
   private def idMatchBase(spark: SparkSession, table: TsTable, del: DataFrame,
@@ -103,7 +103,7 @@ object RowIdOps {
         Some(del.join(broadcast(intervals),
             col(RowId) >= col("__lo") && col(RowId) <= col("__hi"))
           .select(col("__f"), (col(RowId) - col("__lo")).as("__i"),
-            lit(true).as("__m"), lit(null).cast("long").as("__b")))
+            lit(true).as("__m"), lit(null).cast("long").as("__t")))
       }
 
     // materialized arm: id-column-pruned scan of only those files
@@ -114,7 +114,7 @@ object RowIdOps {
           col("_metadata.row_index").as("__i"), col(RowId))
         .join(del, Seq(RowId), "left_semi")
         .select(col("__f"), col("__i"),
-          lit(true).as("__m"), lit(null).cast("long").as("__b")))
+          lit(true).as("__m"), lit(null).cast("long").as("__t")))
 
     // already-deleted positions are excluded (replayed sets stay no-ops)
     val base = (posBase.toSeq ++ matBase.toSeq).reduce(_ unionByName _)

@@ -160,7 +160,7 @@ object UpdateWhere {
         col("_metadata.file_path").as("__f"),
         col("_metadata.row_index").as("__i"),
         matchesCond.as("__m"),
-        DeleteWhere.bucketExpr(table).as("__b")))
+        DeleteWhere.timeMicrosExpr(table).as("__t")))
     val projected = schema.fields.map { f =>
       set.get(f.name) match {
         case Some(v) => v.cast(f.dataType).as(f.name)

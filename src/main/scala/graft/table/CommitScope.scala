@@ -44,6 +44,8 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
   private var gatedUnder = Set.empty[Seq[(String, String)]]
   private var session: Option[SparkSession] = None
   private var landedActions: Option[Seq[LogAction]] = None
+  /** coverage sidecars staged in this scope, by root-relative path */
+  private val stagedCoverage = scala.collection.mutable.HashMap.empty[String, Bitmap]
 
   /** Whether this scope's commit landed (false after a no-op change or an
     * already-applied txn). */
@@ -173,10 +175,12 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
     else out :+ LogAction.UpdateTableMeta(newMeta)
   }
 
-  /** Union of the segments' coverage sidecars. */
+  /** Union of the segments' coverage sidecars (those staged in this scope
+    * from memory, the rest from disk). */
   private[table] def coverageOf(segs: Seq[SegmentMeta]): Bitmap =
     segs.flatMap(_.coveragePath).foldLeft(Bitmap.empty) { (acc, rel) =>
-      acc.union(Bitmap.deserialize(Files.readAllBytes(local(s"$root/$rel"))))
+      acc.union(stagedCoverage.getOrElse(rel,
+        Bitmap.deserialize(Files.readAllBytes(local(s"$root/$rel")))))
     }
 
   /** Write `cov` as the table-coverage snapshot for the commit over `st`
@@ -194,7 +198,14 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
     * stats, CHECK gate, coverage sidecars for time-series tables) and
     * return their metas, ready to ride this scope's commit. */
   def stageSegments(df: DataFrame): Seq[SegmentMeta] =
-    segmentsOf(df, stage(df, "data/", table.segmentWriteOptions))
+    segmentsOf(df.sparkSession, stageData(df))
+
+  /** Write `df` as data files; on a time-series table each file's writer
+    * also builds its coverage bitmap (the time column is checked first,
+    * before any job runs). */
+  private[table] def stageData(df: DataFrame): Seq[CommitScope.Staged] =
+    stage(df, "data/", table.segmentWriteOptions ++
+      table.timeSpec.map(CoverageParquet.options(df.schema, _)).getOrElse(Map.empty))
 
   /** Stage a change-record DataFrame (logical table columns +
     * `_change_type`) under `_cdc/` and return the AddCdcFile actions that
@@ -203,8 +214,7 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
     * read-time column mapping, so a record written before a RENAME still
     * reads under the new name. */
   def stageCdc(df: DataFrame): Seq[LogAction.AddCdcFile] =
-    stage(df, "_cdc/cdc-", Map.empty)
-      .map { case (rel, fs) => LogAction.AddCdcFile(rel, fs.rowCount) }
+    stage(df, "_cdc/cdc-", Map.empty).map(f => LogAction.AddCdcFile(f.rel, f.stats.rowCount))
 
   /** Write a per-segment sidecar (DV bitmap, coverage) owned by this scope. */
   def writeSidecar(rel: String, bytes: Array[Byte]): Unit = {
@@ -212,18 +222,17 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
     table.writeBytes(s"$root/$rel", bytes)
   }
 
-  /** The one staging routine: write `df` (physical names) into a
-    * `.staging-*` tree, read every part file's footer stats, discard
-    * zero-row parts (a rewrite partition whose rows were all filtered
-    * away; committing one would create a rowCount=0 segment without a
-    * coverage sidecar, wedging the time-series append precondition), and
-    * move the rest to `<relPrefix><id>-NNNNN.parquet`. Returns
-    * (root-relative path, footer stats) per kept file. A liveness beacon
-    * keeps the staging tree's mtime fresh for the whole write, so Expire's
-    * crashed-writer reclamation never races a live writer whose upstream
-    * stages outlast its grace period. */
+  /** The one staging routine: write `df` (physical names) through
+    * [[CoverageParquet]] into a `.staging-*` tree, read every part file's
+    * footer stats (and, when `options` turn coverage on, its coverage
+    * sidecar), discard zero-row parts (a rewrite partition whose rows were
+    * all filtered away; committing one would create a rowCount=0
+    * segment), and move the rest to `<relPrefix><id>-NNNNN.parquet`.
+    * A liveness beacon keeps the staging tree's mtime fresh for the whole
+    * write, so Expire's crashed-writer reclamation never races a live
+    * writer whose upstream stages outlast its grace period. */
   private[table] def stage(df: DataFrame, relPrefix: String,
-                           options: Map[String, String]): Seq[(String, FooterStats.FileStats)] = {
+                           options: Map[String, String]): Seq[CommitScope.Staged] = {
     val id = UUID.randomUUID().toString.take(8)
     val stagingAbs = s"$root/.staging-$id"
     val heartbeat = StagingHeartbeat.start(stagingAbs)
@@ -231,16 +240,29 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
       // toPhysical: inputs arrive logical (appends, user expressions) or
       // physical (segmentScan); the rename is by-name, so either lands
       // under the files' frozen physical names
-      table.toPhysical(df).write.options(options).mode("overwrite").parquet(stagingAbs)
+      try table.toPhysical(df).write.format(classOf[CoverageParquet].getName)
+        .options(options).mode("overwrite").save(stagingAbs)
+      catch {
+        // the writer's typed overflow arrives as the cause of Spark's
+        // write-failure error; surface it as itself
+        case e: Exception =>
+          var c: Throwable = e
+          while (c != null && !c.isInstanceOf[BucketDomainOverflowException]) c = c.getCause
+          throw (if (c != null) c else e)
+      }
       val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      val coverage = CoverageParquet.enabled(options)
       FooterStats.readAll(conf, listParquet(local(stagingAbs)))
         .filter(_._2.rowCount > 0).zipWithIndex.map { case ((src, fs), i) =>
+          val cov = if (coverage)
+            Some(Bitmap.deserialize(Files.readAllBytes(local(src + CoverageParquet.Suffix))))
+          else None
           val rel = f"$relPrefix$id-$i%05d.parquet"
           val dst = local(s"$root/$rel")
           Files.createDirectories(dst.getParent)
           staged += rel
           Files.move(local(src), dst)
-          rel -> fs
+          CommitScope.Staged(rel, fs, cov)
         }
     } finally {
       // stop (join) the beacon BEFORE deleting its tree: a touch racing the
@@ -254,31 +276,26 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
   /** Segment metas for staged data files: CHECK gate (stats fast path —
     * pass-through rewrites clear it from footer stats, and it is the only
     * net that can catch an UPDATE whose SET drives rows out of bounds),
-    * then coverage sidecars for time-series tables. */
-  private[table] def segmentsOf(df: DataFrame,
-                                files: Seq[(String, FooterStats.FileStats)]): Seq[SegmentMeta] = {
+    * then each file's coverage bitmap registered as its sidecar under
+    * `_coverage/segments/` (kept in memory for this scope's commit). */
+  private[table] def segmentsOf(spark: SparkSession,
+                                files: Seq[CommitScope.Staged]): Seq[SegmentMeta] = {
     if (files.isEmpty) return Nil
-    val spark = df.sparkSession
     val checks = table.state.tableMeta.map(_.checks).getOrElse(Nil)
     table.enforceChecks(spark, checks,
-      files.map { case (rel, fs) => (s"$root/$rel", fs.stats, fs.rowCount) })
+      files.map(f => (s"$root/${f.rel}", f.stats.stats, f.stats.rowCount)))
     gatedUnder += checks
     session = Some(spark)
-    val cov: Map[String, Bitmap] = table.timeSpec match {
-      case Some(spec) =>
-        if (!df.columns.contains(spec.timestampColumn))
-          throw SchemaMismatchException(s"time column '${spec.timestampColumn}' missing from appended data")
-        table.computeCoverage(spark, files.map(f => s"$root/${f._1}"), spec)
-      case None => Map.empty
-    }
-    files.map { case (rel, fs) =>
-      val segId = SegmentMeta.segmentIdV1(rel, local(s"$root/$rel"))
-      val covRel = cov.get(PathNorm.canonical(s"$root/$rel")).map { bm =>
+    files.map { f =>
+      val segId = SegmentMeta.segmentIdV1(f.rel, local(s"$root/${f.rel}"))
+      val covRel = f.coverage.map { bm =>
         val r = s"_coverage/segments/segcov-$segId.cov"
         writeSidecar(r, bm.serialize())
+        stagedCoverage(r) = bm
         r
       }
-      SegmentMeta(segId, rel, "parquet", fs.rowCount, Some(fs.fileSize), fs.stats, covRel)
+      SegmentMeta(segId, f.rel, "parquet", f.stats.rowCount, Some(f.stats.fileSize),
+        f.stats.stats, covRel)
     }
   }
 
@@ -316,4 +333,10 @@ private[graft] final class CommitScope private[table] (table: TsTable) {
     }
     Files.deleteIfExists(p)
   }
+}
+
+private[table] object CommitScope {
+  /** One staged file: root-relative path, footer stats, and — when its
+    * write built one — its coverage bitmap. */
+  final case class Staged(rel: String, stats: FooterStats.FileStats, coverage: Option[Bitmap])
 }

@@ -326,9 +326,11 @@ final class TsTable private (val root: String, val store: LogStore) {
 
   /** Append a DataFrame as one or more new immutable segments — the 9-step
     * pipeline of the reference (table/append.rs:92-350), Spark-first:
-    * the data plane (write, stats, coverage, identity) runs as Spark jobs
-    * and footer reads; only the commit is driver file IO. OCC with rebase
-    * retry on version conflicts. Returns the committed version.
+    * the data plane is ONE Spark write job whose per-file writers also
+    * build each file's coverage bitmap ([[CoverageParquet]]); stats,
+    * disk schema and entity identity come from the footers, and the
+    * commit is driver file IO. OCC with rebase retry on version
+    * conflicts. Returns the committed version.
     *
     * `txn = Some((appId, batchId))` makes the append idempotent per
     * application: the (appId, batchId) watermark commits atomically with
@@ -365,17 +367,17 @@ final class TsTable private (val root: String, val store: LogStore) {
   }
 
   /** An append's data half: write the segments once (all commit retries
-    * are metadata-only), footer stats, CHECK gate, coverage sidecars, and
-    * the disk schema + entity identity its commit enforces. None for empty
-    * input — a successful NO-OP whose commit still advances a streaming
-    * txn's watermark, so replays of the empty batch stay idempotent (this
-    * is what lets the streaming sinks hand every batch straight to append
-    * without a pre-flight isEmpty job). */
+    * are metadata-only), footer stats, CHECK gate, the coverage bitmaps
+    * the write built, and the disk schema + entity identity its commit
+    * enforces. None for empty input — a successful NO-OP whose commit
+    * still advances a streaming txn's watermark, so replays of the empty
+    * batch stay idempotent (this is what lets the streaming sinks hand
+    * every batch straight to append without a pre-flight isEmpty job). */
   private[graft] def stageAppend(scope: CommitScope, df: DataFrame): Option[TsTable.StagedAppend] = {
     val spark = df.sparkSession
-    val files = scope.stage(df, "data/", segmentWriteOptions)
+    val files = scope.stageData(df)
     if (files.isEmpty) return None
-    val segs = scope.segmentsOf(df, files)
+    val segs = scope.segmentsOf(spark, files)
     val paths = segs.map(s => s"$root/${s.path}")
     // canonical on-disk schema (reference adopts from the Parquet footer,
     // append.rs:130-151): Spark embeds the exact StructType JSON in the
@@ -386,11 +388,11 @@ final class TsTable private (val root: String, val store: LogStore) {
     // embedded writer schema must be normalized identically or the
     // adopt-then-enforce comparison would reject a second append whose
     // builder pipeline produced non-null columns (e.g. generator kernels)
-    val diskSchema = files.head._2.sparkSchemaJson
+    val diskSchema = files.head.stats.sparkSchemaJson
       .flatMap(j => scala.util.Try(org.apache.spark.sql.graft.Bridge.asNullable(
         org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])).toOption)
       .getOrElse(spark.read.parquet(paths: _*).schema)
-    val identity = timeSpec.flatMap(spec => extractEntityIdentity(spark, paths, spec, files.map(_._2)))
+    val identity = timeSpec.flatMap(spec => extractEntityIdentity(spark, paths, spec, files.map(_.stats)))
     Some(TsTable.StagedAppend(segs, diskSchema, identity))
   }
 
@@ -437,7 +439,7 @@ final class TsTable private (val root: String, val store: LogStore) {
         throw new IllegalStateException(
           s"cannot append: ${uncovered.size} existing segments lack coverage sidecars")
       val tableCov = loadTableCoverage(st, heal = false)
-      val appendCov = scope.coverageOf(a.segs)
+      val appendCov = scope.coverageOf(a.segs) // staged in this scope: from memory
       val overlap = appendCov.intersect(tableCov)
       if (!overlap.isEmpty)
         throw CoverageOverlapException(a.segs.head.path, overlap.cardinality, overlap.runList.head._1)
@@ -1250,69 +1252,6 @@ final class TsTable private (val root: String, val store: LogStore) {
       }
     }
 
-  /** Per-file coverage bitmaps — ONE distributed job that never ships raw
-    * (file, bucket) rows to the driver: each partition folds its rows into
-    * per-file distinct-bucket sets and emits them as serialized partial
-    * bitmaps; partials merge by file via union (the Spark form of the
-    * reference's rayon partial-bitmap merge, coverage.rs:324-352), so the
-    * driver receives exactly one run-length bitmap per staged file. The
-    * old distinct+collect shipped every distinct (file, bucket) pair — at
-    * 1 s buckets a year-spanning append is ~3×10^7 driver rows; now the
-    * driver cost is O(files × runs), runs-compressed. Bucket id =
-    * floorDiv(epochSeconds, len) with pre-epoch clamp to 0, matching
-    * BucketMath / the reference's release-mode clamp (bucket.rs:66-75). */
-  private[table] def computeCoverage(spark: SparkSession, paths: Seq[String],
-                              spec: TimeIndexSpec): Map[String, Bitmap] = {
-    import spark.implicits._
-    val lenSec = spec.bucket.lengthSeconds
-    val job = spark.read.parquet(paths: _*)
-      // null timestamps carry NO coverage (reference flatten,
-      // coverage.rs:179-246). The filter must run on the COLUMN: inside
-      // the bucket expression greatest() SKIPS nulls, so a null ts would
-      // otherwise clamp to bucket 0 and falsely claim epoch coverage
-      // (and collide two unrelated appends that both hold a null row)
-      .where(col(spec.timestampColumn).isNotNull)
-      .select(
-        input_file_name().as("f"),
-        // greatest(...,0) clamps pre-epoch (reference bucket.rs:66-75);
-        // integer `div` truncation == floor on the clamped non-negative domain
-        // CAST handles TIMESTAMP_NTZ columns; session tz is UTC so the
-        // cast is value-preserving
-        expr(s"greatest(unix_micros(CAST(`${spec.timestampColumn}` AS TIMESTAMP)), 0L) div ${1000000L * lenSec}L")
-          .as("b"))
-      // dedup FIRST through Spark's hash aggregate — map-side partial,
-      // Tungsten-managed, spillable. Folding raw rows straight into
-      // per-task sets would pin unbounded unspillable heap on exactly the
-      // fine-bucket wide-range shape this path exists for; after distinct
-      // each partition holds only unique (file, bucket) pairs, so a plain
-      // buffer per file suffices (no per-row set membership checks).
-      .distinct()
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        val perFile = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-        it.foreach { case (f, b) =>
-          if (b > Int.MaxValue) throw BucketDomainOverflowException(b)
-          perFile.getOrElseUpdate(f, scala.collection.mutable.ArrayBuffer.empty) += b.toInt
-        }
-        perFile.iterator.map { case (f, s) => (f, Bitmap(s).serialize()) }
-      }
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        (f, it.foldLeft(Bitmap.empty)((acc, p) => acc.union(Bitmap.deserialize(p._2))).serialize())
-      }
-    // surface the typed overflow error the way the driver-side build did,
-    // not buried as the cause of a generic SparkException
-    val partials =
-      try job.collect()
-      catch {
-        case e: Exception =>
-          var c: Throwable = e
-          while (c != null && !c.isInstanceOf[BucketDomainOverflowException]) c = c.getCause
-          if (c != null) throw c else throw e
-      }
-    partials.map { case (f, bytes) => normalizeFileUri(f) -> Bitmap.deserialize(bytes) }.toMap
-  }
-
   /** Entity identity via footer-stats fast path (min==max per column ⇒
     * constant), falling back to a distinct().limit(2) scan — the same
     * two-tier scheme as the reference (formats/parquet/entity_identity.rs). */
@@ -1405,13 +1344,6 @@ final class TsTable private (val root: String, val store: LogStore) {
   private def stripScheme(p: String): String =
     if (p.startsWith("file:")) new java.net.URI(p).getPath else p
 
-  /** Canonical local path for matching input_file_name() URIs against
-    * staged paths: input_file_name yields "file:///abs/x" while staged
-    * paths can be RELATIVE (a CLI `--table ./events` root) — bare scheme
-    * stripping would never match those, committing time-series segments
-    * without coverage sidecars and wedging later appends. PathNorm
-    * absolutizes + normalizes both producers. */
-  private def normalizeFileUri(p: String): String = graft.meta.PathNorm.canonical(p)
 }
 
 object TsTable {

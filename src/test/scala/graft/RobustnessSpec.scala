@@ -96,6 +96,19 @@ class RobustnessSpec extends SparkFunSuite {
     intercept[SchemaMismatchException](t.append(bad))
   }
 
+  test("a segment whose times are all null still gets a coverage sidecar; later appends land") {
+    import spark.implicits._
+    val t = TsTable.create(tmpDir("null-ts"), TableMeta("p",
+      TableKind.TimeSeries(TimeIndexSpec("ts", Nil, TimeBucket.parse("1m"), None)), None, None))
+    t.append(Seq[Option[Long]](None, None).toDF("s")
+      .select(col("s").cast("timestamp").as("ts"), lit(1.0).as("price")).coalesce(1))
+    assert(t.state.liveSegments.forall(_.coveragePath.isDefined))
+    assert(t.loadTableCoverage(heal = false).isEmpty)
+    t.append(Seq(61L).toDF("s").select(col("s").cast("timestamp").as("ts"), lit(2.0).as("price")))
+    assert(t.loadTableCoverage(heal = false).cardinality == 1L)
+    assert(t.scan(spark).count() == 3L)
+  }
+
   test("expire refuses out-of-range watermarks; double expire is idempotent") {
     val root = tmpDir("expire-edge")
     val t = TsTable.create(root, tokenMeta())
@@ -175,20 +188,13 @@ class RobustnessSpec extends SparkFunSuite {
     val n = 120000L
     // stride-7s rows: n distinct 1 s buckets, every run a singleton — the
     // worst case for run-length compression, and exactly the fine-bucket ×
-    // wide-range shape whose (file, bucket) rows used to be collect()ed to
-    // the driver (~3×10^7 rows for a year at 1 s buckets). Now the driver
-    // receives one bitmap per staged file; the raw pairs stay distributed.
+    // wide-range shape whose (file, bucket) rows must never be collect()ed
+    // to the driver (~3×10^7 rows for a year at 1 s buckets): each file's
+    // writer folds its rows into its own bitmap, so the driver reads one
+    // bitmap per staged file
     val df = spark.range(n).select(
       timestamp_seconds(col("id") * 7 + 1000000L).as("ts"), col("id").as("v"))
-    // tiny split size so each staged file spans several read partitions —
-    // forces the partial-bitmap merge path (groupByKey union), not just
-    // the one-partial-per-file fast case
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, (64 * 1024).toString)
-      t.append(df.repartition(2))
-    } finally spark.conf.set(key, prev)
+    t.append(df.repartition(2))
     val cov = t.loadTableCoverage()
     assert(cov.cardinality == n, s"expected $n covered buckets, got ${cov.cardinality}")
     assert(cov.runList.size == n, "stride-7 buckets must stay singleton runs")

@@ -40,7 +40,7 @@ class MorConcurrencySpec extends SparkFunSuite {
             col("_metadata.file_path").as("__f"),
             col("_metadata.row_index").as("__i"),
             (col("n_tok") < 900).as("__m"),
-            DeleteWhere.bucketExpr(t).as("__b")))
+            DeleteWhere.timeMicrosExpr(t).as("__t")))
         val plan = DeleteWhere.morCompute(spark, t, scope, candidates, base).get
         assert(dvFiles(root).nonEmpty, "plan sidecars staged")
 
@@ -140,7 +140,7 @@ class MorConcurrencySpec extends SparkFunSuite {
           col("_metadata.file_path").as("__f"),
           col("_metadata.row_index").as("__i"),
           (col("source") === "src00").as("__m"),
-          DeleteWhere.bucketExpr(t).as("__b")))).get
+          DeleteWhere.timeMicrosExpr(t).as("__t")))).get
 
     val e = intercept[IllegalStateException] {
       t.scoped { scope =>
@@ -248,7 +248,7 @@ class MorConcurrencySpec extends SparkFunSuite {
         val plan = DeleteWhere.morCompute(spark, t, scope, read,
           DeleteWhere.morBase(spark, t, read)(raw => raw.select(
             col("_metadata.file_path").as("__f"), col("_metadata.row_index").as("__i"),
-            matched.as("__m"), DeleteWhere.bucketExpr(t).as("__b")))).get
+            matched.as("__m"), DeleteWhere.timeMicrosExpr(t).as("__t")))).get
         val images = t.segmentScan(spark, read).where(matched).withColumn("price", lit(-1.0))
         val adds = scope.stageSegments(images)
         val cdc = scope.stageCdc(images.withColumn("_change_type", lit("update_post")))
