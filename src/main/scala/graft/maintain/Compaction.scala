@@ -1,8 +1,7 @@
 package graft.maintain
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.log.{ConflictException, CommitFileExistsException, LogAction}
 import graft.meta.SegmentMeta
 import graft.table.{Change, FooterStats, TsTable}
@@ -16,13 +15,15 @@ import graft.table.{Change, FooterStats, TsTable}
   * Scale design:
   *  - The PLAN is O(files) driver-side arithmetic over manifest stats — no
   *    data is read to decide what to rewrite.
-  *  - Each bin's REWRITE is one distributed job:
-  *    read(bin files) → curve key (codegen'd CurveKey3) →
-  *    repartitionByRange(outFiles, key, salt) → sortWithinPartitions(key) →
-  *    write. Range partitioning samples the key distribution, so skewed
-  *    sources land balanced output files; the salt column breaks ties for
-  *    heavily-duplicated curve keys (hot sources) without perturbing the
-  *    final order (sort is on the full (key, salt) prefix order).
+  *  - Each bin's REWRITE is one narrow bounds sample of the bin's
+  *    cluster-key columns plus one distributed job through the clustering
+  *    router ([[RangeBuckets.cluster]], shared by every clustered writer):
+  *    read(bin files) → curve key (codegen'd CurveKey3: zorder, hilbert
+  *    or lexico) → range bucket over the sampled (key, salt) bounds →
+  *    hash repartition on the bucket label → sortWithinPartitions(key,
+  *    salt) → write. The sampled bounds balance skewed sources across
+  *    output files; the salt breaks ties for heavily-duplicated curve keys
+  *    (hot sources) without perturbing the final order.
   *  - Bins commit independently (atomic swap per bin) and journal to the
   *    lineage log, so a crashed job resumes by skipping completed bins and
   *    concurrent readers stay snapshot-isolated throughout.
@@ -235,33 +236,10 @@ object Compaction {
         if (table.rowTrackingEnabled) table.segmentScanWithRowIds(scoped, inputs) else raw
       val df = graft.table.DeletionVectors.liveRowFilter(table.root, inputs)
         .map(rawIds.where).getOrElse(rawIds)
-      val sorted = curve match {
-        case ("zorder" | "hilbert") if outFiles > 1 =>
-          // range boundaries from an EXPLICIT sample over the cluster-key
-          // columns only — parquet column pruning skips the token payload
-          // (~95 % of the bin's bytes), unlike repartitionByRange, whose
-          // boundary-sampling job re-executes the FULL child and read the
-          // bin twice per rewrite (measured ~40 % of zorder rewrite wall;
-          // caching the rows instead was measured and LOST badly —
-          // deserialized token rows are ~3× the parquet bytes. MERGE
-          // differs: its child embeds an anti join, so it caches and
-          // keeps the stock range exchange).
-          // sample from the SAME manifest-backed relation as the rewrite:
-          // a second read.parquet here re-listed the whole bin (a second
-          // listing job per rewrite); column pruning still keeps the
-          // sample scan narrow
-          sampledBoundsFor(raw, curve, fit,
-            math.max(inputs.map(_.rowCount).sum, 1L), outFiles) match {
-            case None =>
-              // a zero-row sample (manifest rowCounts inflating the fraction
-              // denominator, or a pathological Bernoulli draw) must degrade
-              // to the stock range exchange, not abort the rewrite
-              clusterSorted(df, curve, outFiles, fit)
-            case Some((bk, bs, labels)) =>
-              clusterSortedByBounds(df, curve, outFiles, fit, bk, bs, labels)
-          }
-        case _ => clusterSorted(df, curve, outFiles, fit)
-      }
+      // bounds sample the same manifest-backed physical scan (a second
+      // read.parquet re-listed the bin); caching the rows instead LOST
+      // badly — deserialized token rows are ~3× the parquet bytes
+      val sorted = RangeBuckets.cluster(df, Seq(raw), inputs.map(_.rowCount).sum, curve, outFiles, fit)
       // compaction is LOGICALLY ROW-PRESERVING (DV materialization
       // included: the masked rows were already deleted, and recorded, by
       // the commit that attached the DV) — mark it so change-feed readers
@@ -272,57 +250,6 @@ object Compaction {
           actions = Seq(LogAction.DataNeutral))))
       }
     }
-  }
-
-  /** Explicit range-partition boundaries from a narrow sample of
-    * `sampleSrc` (projected to curve key + salt, so parquet column pruning
-    * skips the payload): the shared boundary pass behind
-    * [[clusterSortedByBounds]]. Used by compaction AND by MERGE — with
-    * precomputed bounds the clustered write is ONE execution of its child,
-    * where `repartitionByRange`'s own boundary-sampling job re-executed
-    * the full child (for MERGE that child embeds the anti-join + union, so
-    * rounds 2–5 paid a MEMORY_AND_DISK persist of the whole merged row set
-    * just to keep the double execution cheap; the explicit bounds remove
-    * both the cache and the second pass). Returns None on an empty sample
-    * (degrade to the stock range exchange, never abort). */
-  private[maintain] def sampledBoundsFor(sampleSrc: DataFrame, curve: String,
-      fit: ClusterKey.Fit, rows: Long,
-      outFiles: Int): Option[(Array[Long], Array[Long], Array[Int])] = {
-    val targetSamples = math.min(outFiles.toLong * 1000L, 1000000L)
-    val fraction = math.min(1.0, targetSamples.toDouble / math.max(rows, 1L))
-    val sample = sampleSrc
-      .select(ClusterKey.curveKey(curve, fit).as("k"),
-        ClusterKey.saltCol(fit).as("s"))
-      .sample(withReplacement = false, fraction, seed = 42L)
-      .collect()
-      .map(r => (if (r.isNullAt(0)) Long.MinValue else r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1)))
-    if (sample.isEmpty) None
-    else {
-      val (bk, bs) = RangeBuckets.boundsFromSample(sample, outFiles)
-      Some((bk, bs, RangeBuckets.labelsFor(outFiles)))
-    }
-  }
-
-  /** The zorder/hilbert layout against PRECOMPUTED range boundaries: the
-    * codegen'd [[RangeBucketLabel]] routes each row to its range's label,
-    * the hash `repartition(n, lbl)` delivers range r to shuffle partition
-    * r (labels invert HashPartitioning — see [[RangeBuckets]]), and the
-    * in-partition sort restores exact (key, salt) order. Identical layout
-    * semantics to `repartitionByRange(n, key, salt)` with ONE read of the
-    * bin instead of two. */
-  private[maintain] def clusterSortedByBounds(df: DataFrame, curve: String, outFiles: Int,
-                                              fit: ClusterKey.Fit, bk: Array[Long],
-                                              bs: Array[Long], labels: Array[Int]): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge.{ofExpr, toExpr}
-    df.withColumn("__ckey", coalesce(ClusterKey.curveKey(curve, fit), lit(Long.MinValue)))
-      .withColumn("__salt", coalesce(ClusterKey.saltCol(fit), lit(0L)))
-      .withColumn("__lbl", ofExpr(RangeBucketLabel(
-        toExpr(col("__ckey")), toExpr(col("__salt")),
-        bk.toSeq, bs.toSeq, labels.toSeq)))
-      .repartition(outFiles, col("__lbl"))
-      .sortWithinPartitions(col("__ckey"), col("__salt"))
-      .drop("__ckey", "__salt", "__lbl")
   }
 
   /** Run `f` with parquet read splits sized so `totalBytes` of input makes
@@ -360,30 +287,5 @@ object Compaction {
     }
     scoped.conf.set("spark.sql.files.maxPartitionBytes", targetSplit.toString)
     f(scoped)
-  }
-
-  /** Apply the clustering layout: curve key + salt → GLOBAL range partition
-    * over the whole bin → in-partition sort → key columns dropped before
-    * write (byte-identical user schema). The salt breaks ties when curve
-    * keys collide heavily (hot source × narrow n_tok) so range
-    * partitioning stays balanced under Zipf skew; it is a suffix of the
-    * sort order, never perturbing curve locality.
-    * "lexico" = hierarchical (source, n_tok, doc_id) sort: perfect
-    * leading-column pruning, no multi-dim balance — offered as the
-    * alternative layout. */
-  def clusterSorted(df: DataFrame, curve: String, outFiles: Int,
-                    fit: ClusterKey.Fit = ClusterKey.Fit.default): DataFrame = curve match {
-    case "zorder" | "hilbert" =>
-      df.withColumn("__ckey", ClusterKey.curveKey(curve, fit))
-        .withColumn("__salt", ClusterKey.saltCol(fit))
-        .repartitionByRange(outFiles, col("__ckey"), col("__salt"))
-        .sortWithinPartitions(col("__ckey"), col("__salt"))
-        .drop("__ckey", "__salt")
-    case "lexico" =>
-      val cols = fit.coords.map(c => col(c.column))
-      df.repartitionByRange(outFiles, cols: _*)
-        .sortWithinPartitions(cols: _*)
-    case _ =>
-      df.repartition(outFiles)
   }
 }

@@ -158,18 +158,12 @@ object MergeInto {
     // that the next compaction bin-packs; at 10^12-row scale outFilesEst ≫
     // cores so targetFileSize governs, exactly as in compaction.
     val outFiles = math.max(outFilesEst, spark.sparkContext.defaultParallelism)
-    // clusterSorted's stock path range-partitions on the curve key, and
-    // range partitioning SAMPLES its child before shuffling — here the
-    // child is read→anti-join→union, so that plan would execute the whole
-    // merge pipeline twice (rounds 2–5 paid a MEMORY_AND_DISK persist of
-    // the full merged row set to make the second pass cheap). Instead the
-    // boundaries come from an explicit NARROW sample over the candidates'
-    // cluster-key columns (guide §2.4: one exchange, one pass — the same
-    // no-resample layout compaction uses): parquet column pruning keeps
-    // the sample to ~% of the bin bytes, the merged plan executes ONCE,
-    // and nothing is cached. The 1-in-100 keys the anti-join removes and
-    // the update rows it adds shift the sampled distribution marginally —
-    // range bounds affect file balance only, never results.
+    // clustered through the router: boundaries come from an explicit
+    // NARROW sample (cluster-key columns only) of the candidates' scan
+    // together with the update set, so the merged plan — read→anti-
+    // join→union — executes ONCE and nothing is cached, and insert-heavy
+    // merges whose new keys lie past every candidate's range spread over
+    // the buckets instead of piling into the last one
     val (added, mergedV, landed) = Compaction.withSizedReadSplits(spark, candBytes, candidates.size) { scoped =>
       // the candidate read is created on the scoped session: split sizing
       // binds to the relation's session, so the tuned maxPartitionBytes
@@ -203,33 +197,18 @@ object MergeInto {
                 .withColumn(graft.table.RowTracking.RowCommitCol, lit(null).cast("long")))
           }
         }
-      val fit = ClusterKey.fitFor(table)
-      // stock clusterSorted still embeds a range-sampling double execution
-      // for the lexico layout — only that path keeps the old persist
-      val needsCache = curve == "lexico" && outFiles > 1
-      val toCluster =
-        if (needsCache) merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else merged
-      try {
-        val clustered =
-          if ((curve == "zorder" || curve == "hilbert") && outFiles > 1 && candidates.nonEmpty)
-            Compaction.sampledBoundsFor(
-              table.toLogical(table.segmentScan(scoped, candidates)), curve, fit,
-              math.max(targetRows, 1L), outFiles) match {
-              case Some((bk, bs, labels)) =>
-                Compaction.clusterSortedByBounds(toCluster, curve, outFiles, fit, bk, bs, labels)
-              case None => Compaction.clusterSorted(toCluster, curve, outFiles, fit)
-            }
-          else Compaction.clusterSorted(toCluster, curve, outFiles, fit)
-        table.scoped { scope =>
-          val cdc =
-            if (table.cdfEnabled) scope.stageCdc(mergeCdc(scoped, table, candidates, upd, key))
-            else Nil
-          val segs = scope.stageSegments(clustered)
-          val v = scope.commit(txn = txn)(_ => Change(removes = candidates, adds = segs, actions = cdc))
-          (segs, v, scope.landed)
-        }
-      } finally if (needsCache) toCluster.unpersist(false)
+      val keys = (if (candidates.isEmpty) Nil
+        else Seq(table.toLogical(table.segmentScan(scoped, candidates)))) :+ upd
+      val clustered = RangeBuckets.cluster(merged, keys, targetRows + updCount, curve, outFiles,
+        ClusterKey.fitFor(table))
+      table.scoped { scope =>
+        val cdc =
+          if (table.cdfEnabled) scope.stageCdc(mergeCdc(scoped, table, candidates, upd, key))
+          else Nil
+        val segs = scope.stageSegments(clustered)
+        val v = scope.commit(txn = txn)(_ => Change(removes = candidates, adds = segs, actions = cdc))
+        (segs, v, scope.landed)
+      }
     }
     // replayed streaming batch: nothing landed (the scope deleted its
     // staged files); report the batch as applied at the watermark's version
@@ -272,9 +251,9 @@ object MergeInto {
     }
     val live = table.state.liveSegments
     val curve = table.clusterSpec.map(_.curve).getOrElse("none")
-    // the update set is consumed four times (count, candidate refinement,
-    // match join, clustered write) — pin it once, whatever upstream it
-    // came from
+    // the update set is consumed five times (count, candidate refinement,
+    // match join, bounds sample, clustered write) — pin it once, whatever
+    // upstream it came from
     val upd = updates.dropDuplicates(key)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -346,7 +325,7 @@ object MergeInto {
           .withColumn(graft.table.RowTracking.RowCommitCol, lit(null).cast("long"))
       }
     val newSegs = scope.stageSegments(
-      Compaction.clusterSorted(toWrite, curve, outFiles, ClusterKey.fitFor(table)))
+      RangeBuckets.cluster(toWrite, Seq(pinned), updCount, curve, outFiles, ClusterKey.fitFor(table)))
     val cdc =
       if (table.cdfEnabled) scope.stageCdc(mergeCdc(spark, table, candidates, pinned, key))
       else Nil

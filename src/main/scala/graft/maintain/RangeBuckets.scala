@@ -1,17 +1,23 @@
 package graft.maintain
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
-/** Range partitioning WITHOUT the range exchange's hidden second read.
+/** The clustering router: every clustered write — compaction, CoW and
+  * MOR MERGE, MOR UPDATE, the row-id upsert — lays out its rows through
+  * [[RangeBuckets.cluster]], for every curve (zorder, hilbert, lexico).
   *
-  * `repartitionByRange` samples its child to learn boundaries — and the
-  * sampling job EXECUTES the full child, so a compaction bin is read and
-  * decoded twice per rewrite (measured: the sample pass roughly doubles
-  * scan bytes, ~40 % of zorder rewrite wall time — the token payload is
-  * ~95 % of the bytes and the sampler decodes it just to throw it away).
-  * This helper splits the two concerns the exchange fuses:
+  * It is range partitioning WITHOUT the range exchange's hidden second
+  * read. Spark's stock range repartition samples its child to learn
+  * boundaries — and the sampling job EXECUTES the full child, so a
+  * compaction bin is read and decoded twice per rewrite (measured: the
+  * sample pass roughly doubles scan bytes, ~40 % of zorder rewrite wall
+  * time — the token payload is ~95 % of the bytes and the sampler decodes
+  * it just to throw it away), and a MERGE's read→anti-join→union runs
+  * twice. The router splits the two concerns the exchange fuses:
   *
   *  1. boundaries come from an EXPLICIT sample over a NARROW projection
   *     (cluster-key columns only — parquet column pruning skips the
@@ -23,11 +29,66 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   *     range index), so range r lands exactly in shuffle partition r and
   *     the hash exchange becomes a range exchange with zero sampling.
   *
-  * Net: one full read of the bin instead of two; identical clustering
-  * semantics (contiguous (key, salt) ranges per output file, nulls
-  * low-ordered via the caller's coalesce).
+  * Net: one full read of the input instead of two, nothing cached, and
+  * contiguous (key, salt) ranges per output file (nulls low-ordered).
   */
 object RangeBuckets {
+
+  /** Upper bound on sampled rows per bounds pass. */
+  private val MaxSample = 1000000L
+
+  /** Lay `rows` out as `outFiles` clustered partitions: curve key + salt →
+    * range bucket → in-partition sort → key columns dropped (the written
+    * schema is `rows`'s). Boundaries are equi-depth quantiles of a
+    * Bernoulli sample of the union of `sampleFrom` (~1000 rows per output
+    * file, given `rowsEst` rows in it) — the rows being written or cheaper
+    * relations holding the same keys (compaction samples the physical
+    * scan, not the DV-filtered, row-id-tracked rewrite; a CoW MERGE the
+    * candidates' scan plus the update set). The fit is widened to the
+    * sampled values first, so keys past the table's stats (an upsert's new
+    * ids) spread over buckets instead of clamping into the last one.
+    * `outFiles == 1` samples nothing; an empty sample (zero rows) is one
+    * bucket. Curve `none` is a plain `repartition(outFiles)`. */
+  private[graft] def cluster(rows: DataFrame, sampleFrom: Seq[DataFrame], rowsEst: Long,
+                             curve: String, outFiles: Int, fit: ClusterKey.Fit): DataFrame = {
+    import org.apache.spark.sql.graft.Bridge.{ofExpr, toExpr}
+    if (!ClusterKey.Curves.contains(curve)) return rows.repartition(outFiles)
+    val (f, bk, bs) =
+      if (outFiles <= 1) (fit, Array.empty[Long], Array.empty[Long])
+      else sampledBounds(sampleFrom, rowsEst, curve, outFiles, fit)
+    rows.withColumn("__ckey", keyOf(curve, f))
+      .withColumn("__salt", saltOf(curve, f))
+      .withColumn("__lbl", ofExpr(RangeBucketLabel(toExpr(col("__ckey")), toExpr(col("__salt")),
+        bk.toSeq, bs.toSeq, labelsFor(outFiles).toSeq)))
+      .repartition(outFiles, col("__lbl"))
+      .sortWithinPartitions(col("__ckey"), col("__salt"))
+      .drop("__ckey", "__salt", "__lbl")
+  }
+
+  private def keyOf(curve: String, f: ClusterKey.Fit) =
+    coalesce(ClusterKey.curveKey(curve, f), lit(Long.MinValue))
+  private def saltOf(curve: String, f: ClusterKey.Fit) =
+    coalesce(ClusterKey.saltCol(curve, f), lit(0L))
+
+  /** The bounds pass: sample the cluster columns of `sampleFrom`, widen
+    * the fit to them, and key the sample driver-side (a projection over a
+    * local relation, which Catalyst evaluates without a job) with the
+    * SAME key and salt expressions the routing uses. */
+  private def sampledBounds(sampleFrom: Seq[DataFrame], rowsEst: Long, curve: String,
+                            outFiles: Int, fit: ClusterKey.Fit)
+      : (ClusterKey.Fit, Array[Long], Array[Long]) = {
+    val fraction = math.min(1.0,
+      math.min(outFiles * 1000L, MaxSample).toDouble / math.max(rowsEst, 1L))
+    val narrow = sampleFrom.map(_.select(fit.coords.map(c => col(c.column)): _*)).reduce(_ union _)
+    val sample = narrow.sample(withReplacement = false, fraction, seed = 42L).collect()
+    val f = fit.widen(sample.toSeq)
+    val keyed = narrow.sparkSession
+      .createDataFrame(java.util.Arrays.asList(sample: _*), narrow.schema)
+      .select(keyOf(curve, f), saltOf(curve, f))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val (bk, bs) = boundsFromSample(keyed, outFiles)
+    (f, bk, bs)
+  }
 
   /** labels(r) routes range r to shuffle partition r under Spark's
     * `HashPartitioning(Seq(lbl: Int), n)`: the label L(r) is the smallest

@@ -174,7 +174,7 @@ object RowIdOps {
         val outFiles = math.max(1, math.min(spark.sparkContext.defaultParallelism,
           math.ceil((cnt * 4096L).toDouble / targetFileSize).toInt * 4))
         val newSegs = scope.stageSegments(
-          Compaction.clusterSorted(images, curve, outFiles, ClusterKey.fitFor(table)))
+          RangeBuckets.cluster(images, Seq(pinned), cnt, curve, outFiles, ClusterKey.fitFor(table)))
         val cdc =
           if (!table.cdfEnabled) Nil
           else {

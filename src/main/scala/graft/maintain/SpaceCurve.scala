@@ -3,10 +3,11 @@ package graft.maintain
 /** Space-filling-curve kernels for multi-dimensional clustering: 3-D
   * bit-interleaved Z-order and Hilbert (Skilling's transpose algorithm,
   * "Programming the Hilbert curve", AIP Conf. Proc. 707, 2004 — public
-  * algorithm). 21 bits per dimension × 3 dims = 63-bit keys that fit a
-  * LongType column, so the cluster sort key stays inside Tungsten's
-  * long-comparator fast path and whole-stage codegen (no binary-type or
-  * UDF boxing in the hot rewrite path).
+  * algorithm), plus the plain concatenation that gives the "lexico"
+  * layout a key of the same shape. 21 bits per dimension × 3 dims =
+  * 63-bit keys that fit a LongType column, so the cluster sort key stays
+  * inside Tungsten's long-comparator fast path and whole-stage codegen
+  * (no binary-type or UDF boxing in the hot rewrite path).
   *
   * New functionality vs the reference (north rule): the reference clusters
   * on one time axis; these curves cluster on (source, n_tok, doc_id).
@@ -26,6 +27,11 @@ object SpaceCurve {
     }
     h
   }
+
+  /** Concatenation of 3 coords, `bits` bits each, `x` in the high bits:
+    * key order is the coordinates' lexicographic order. */
+  def lexico3(x: Long, y: Long, z: Long, bits: Int): Long =
+    (x << (2 * bits)) | (y << bits) | z
 
   /** 3-D Hilbert index via Skilling's AxesToTranspose + MSB interleave. */
   def hilbert3(x: Long, y: Long, z: Long, bits: Int): Long = {

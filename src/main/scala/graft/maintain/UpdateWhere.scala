@@ -202,8 +202,8 @@ object UpdateWhere {
             .map(raw.where).getOrElse(raw)
             .where(matchesCond)
           val matchedRows = matchedRaw.select(projected.toIndexedSeq ++ trackCols: _*)
-          val newSegs = scope.stageSegments(
-            Compaction.clusterSorted(matchedRows, curve, outFiles, ClusterKey.fitFor(table)))
+          val newSegs = scope.stageSegments(RangeBuckets.cluster(matchedRows, Seq(matchedRows),
+            plan.rowsMatched, curve, outFiles, ClusterKey.fitFor(table)))
           // change feed: pre/post images of the matched rows, same commit
           val cdc =
             if (table.cdfEnabled) scope.stageCdc(changeImages(table, spark, schema, set, matchedRaw))

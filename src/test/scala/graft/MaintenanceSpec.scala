@@ -559,7 +559,7 @@ class MaintenanceSpec extends SparkFunSuite {
     import spark.implicits._
     // every label must land in exactly the shuffle partition whose range
     // index it encodes -- verified through a REAL hash repartition, the
-    // same exchange clusterSortedByBounds uses
+    // same exchange the clustering router (RangeBuckets.cluster) uses
     val n = 37
     val labels = RangeBuckets.labelsFor(n)
     assert(labels.distinct.length == n)

@@ -38,9 +38,9 @@ object MicroBench2 {
     val fit = graft.maintain.ClusterKey.Fit.default
     val c128 = Files.createTempDirectory("graft-mb2-c").toString
     val c8 = Files.createTempDirectory("graft-mb2-c8").toString
-    graft.maintain.Compaction.clusterSorted(r, "zorder", 6, fit)
+    graft.maintain.RangeBuckets.cluster(r, Seq(r), rows, "zorder", 6, fit)
       .write.mode("overwrite").parquet(c128)
-    graft.maintain.Compaction.clusterSorted(r, "zorder", 6, fit)
+    graft.maintain.RangeBuckets.cluster(r, Seq(r), rows, "zorder", 6, fit)
       .write.mode("overwrite").option("parquet.block.size", (8 * 1024 * 1024).toString)
       .option("compression", "zstd").parquet(c8)
 

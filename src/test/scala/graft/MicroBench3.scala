@@ -24,7 +24,7 @@ object MicroBench3 {
     TokenGen.generate(spark, rows, numFiles = 200).write.mode("overwrite").parquet(stage)
     val r = spark.read.parquet(stage)
     val fit = graft.maintain.ClusterKey.Fit.default
-    val sorted = graft.maintain.Compaction.clusterSorted(r, "zorder", 6, fit)
+    val sorted = graft.maintain.RangeBuckets.cluster(r, Seq(r), rows, "zorder", 6, fit)
 
     val layouts = Seq(
       ("snappy-rg128", Map("compression" -> "snappy")),

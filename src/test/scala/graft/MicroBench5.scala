@@ -37,7 +37,7 @@ object MicroBench5 {
 
     // scan targets written once (6-file compacted shape)
     val fit = graft.maintain.ClusterKey.Fit.default
-    val sorted = graft.maintain.Compaction.clusterSorted(r, "zorder", 6, fit)
+    val sorted = graft.maintain.RangeBuckets.cluster(r, Seq(r), rows, "zorder", 6, fit)
     sorted.write.mode("overwrite").option("compression", "zstd")
       .option("parquet.block.size", rg8).parquet(dDict)
     sorted.write.mode("overwrite").option("compression", "zstd")

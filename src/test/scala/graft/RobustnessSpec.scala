@@ -85,6 +85,46 @@ class RobustnessSpec extends SparkFunSuite {
     val total = t.state.liveSegments.size
     val hit = filesRead(t.scan(spark).where(col("source") === "src15"))
     assert(hit <= math.max(2, total / 3), s"lexico source scan read $hit of $total files")
+
+    // range-partitioned files CHAIN on the leading column: sorted by min,
+    // each file's range ends at or below where the next begins (disjoint
+    // but for a shared boundary value); `strict` = no shared value either
+    def chained(segs: Seq[SegmentMeta], c: String, strict: Boolean = false): Unit = {
+      val rs = segs.map(s => s.stats(c) match {
+        case ColStats(Some(StatVal.S(mn)), Some(StatVal.S(mx)), _) => (mn, mx)
+        case other => fail(s"no string stats on $c: $other")
+      }).sorted
+      rs.zip(rs.drop(1)).foreach { case ((_, prevMax), (nextMin, _)) =>
+        assert(if (strict) prevMax < nextMin else prevMax <= nextMin, s"$c ranges overlap: $rs")
+      }
+    }
+    chained(t.state.liveSegments, "source")
+    // a CoW MERGE of changed rows plus new keys past the max lays out its
+    // output files the same way
+    val preMerge = t.state.liveSegments.map(_.segmentId).toSet
+    MergeInto.merge(spark, t, TokenGen.generateForIds(spark,
+      (100 until 300).map(i => f"doc-$i%012d"), salt = "v2")
+      .unionByName(TokenGen.generate(spark, 300, idStart = 4000)))
+    chained(t.state.liveSegments.filterNot(s => preMerge(s.segmentId)), "source")
+    assert(t.scan(spark).count() == 4300)
+
+    // the upsert shape on a doc_id-only lexico table: a MOR MERGE of a
+    // changed block plus new keys past the table max writes files with
+    // disjoint doc_id ranges, so a point read of a new key reads one file
+    // (clamped past-the-max keys split by a hash salt would interleave)
+    val u = TsTable.create(tmpDir("lexico-mor"), TableMeta("tokens",
+      TableKind.Clustered(ClusterSpec(Seq("doc_id"), "lexico")), None, None))
+    u.append(TokenGen.generate(spark, 2000, lenSpread = 16, numFiles = 2))
+    val preMor = u.state.liveSegments.map(_.segmentId).toSet
+    MergeInto.mergeMor(spark, u, TokenGen.generateForIds(spark,
+      (500 until 600).map(i => f"doc-$i%012d"), 16, salt = "v2")
+      .unionByName(TokenGen.generate(spark, 100, idStart = 2000, lenSpread = 16)))
+    val written = u.state.liveSegments.filterNot(s => preMor(s.segmentId))
+    assert(written.size >= 2, s"fixture should write several files: ${written.size}")
+    chained(written, "doc_id", strict = true)
+    val newKey = "doc-000000002050"
+    val q = u.scan(spark).where(col("doc_id") === newKey)
+    assert(q.count() == 1 && filesRead(q) == 1)
   }
 
   test("time-series append without the time column is rejected") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.maintain.SpaceCurve
+import graft.maintain.{ClusterKey, CurveKey3, SpaceCurve, StringPrefixBits}
 
 class SpaceCurveSpec extends AnyFunSuite {
 
@@ -49,5 +49,40 @@ class SpaceCurveSpec extends AnyFunSuite {
     // for strings differing in the first bytes
     assert(sortedByBits.indexOf("a") < sortedByBits.indexOf("b"))
     assert(sortedByBits.indexOf("b") <= sortedByBits.indexOf("ba"))
+  }
+
+  test("lexico key: interpreted and codegen agree and follow tuple order") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    // the token shape: (source, n_tok coordinate, doc_id), strings through
+    // their fitted order-preserving windows
+    val src = ClusterKey.StrEnc.fromRange("src00", "src19")
+    val doc = ClusterKey.StrEnc.fromRange("doc-000000000000", "doc-000000099999")
+    val key = CurveKey3(
+      StringPrefixBits(BoundReference(0, StringType, nullable = false), src.skip, src.pmin, src.pmax),
+      BoundReference(1, LongType, nullable = false),
+      StringPrefixBits(BoundReference(2, StringType, nullable = false), doc.skip, doc.pmin, doc.pmax),
+      "lexico")
+    val codegen = GenerateUnsafeProjection.generate(Seq(key))
+    val rnd = new scala.util.Random(7)
+    val edges = Seq(0L, 1L, SpaceCurve.MaxCoord - 1, SpaceCurve.MaxCoord)
+    val tuples = ((for (s <- Seq(0, 19); n <- edges; d <- Seq(0, 99999)) yield (s, n, d)) ++
+      Seq.fill(3000)((rnd.nextInt(20), rnd.nextLong() & SpaceCurve.MaxCoord, rnd.nextInt(100000))))
+      .map { case (s, n, d) => (f"src$s%02d", n, f"doc-$d%012d") }
+      .sorted
+    val keys = tuples.map { case (s, n, d) =>
+      val row = InternalRow(UTF8String.fromString(s), n, UTF8String.fromString(d))
+      val interpreted = key.eval(row).asInstanceOf[Long]
+      assert(codegen(row).getLong(0) == interpreted, s"codegen differs at ($s, $n, $d)")
+      interpreted
+    }
+    assert(keys == keys.sorted, "lexico key decreased along sorted tuples")
+    // the leading column owns the high bits: any source step outranks
+    // every lower dimension
+    assert(SpaceCurve.lexico3(1, 0, 0, SpaceCurve.BitsPerDim) >
+      SpaceCurve.lexico3(0, SpaceCurve.MaxCoord, SpaceCurve.MaxCoord, SpaceCurve.BitsPerDim))
   }
 }
